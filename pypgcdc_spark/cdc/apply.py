@@ -34,6 +34,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pypgcdc_spark.cdc.models import TOAST_UNCHANGED, TableSchema
+from pypgcdc_spark.operators.relayout import (
+    dataset_bytes,
+    load_layout,
+    recover_relayout,
+    save_layout,
+    staged_relayout,
+)
 
 
 def _truncate_filter(env: DataFrame) -> DataFrame:
@@ -308,66 +315,26 @@ class DeleteAwareMerger:
         #: churn growth never pushes the mean bucket below this (tunable).
         self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
         # A prior process may have died mid-rebucket; converge the on-disk
-        # layout to exactly one committed generation before reading meta.
-        self._recover_rebucket()
+        # layout to exactly one committed generation before reading it.
+        recover_relayout(self.target_path)
         if self.auto:
-            self.n_buckets = self._load_meta() or self.MIN_BUCKETS
+            # The layout sidecar also restores the churn EWMA, so a
+            # restarted stream resumes with its keys-per-batch knowledge
+            # instead of re-learning it from scratch.
+            layout = load_layout(self.target_path) or {}
+            self.n_buckets = int(layout.get("n_buckets", self.MIN_BUCKETS))
+            if layout.get("keys_ewma") is not None:
+                self._churn.value = float(layout["keys_ewma"])
         else:
             self.n_buckets = n_buckets
 
-    # -- bucket-layout metadata (auto mode) ------------------------------
+    # -- bucket layout (auto mode) ----------------------------------------
 
-    def _meta_path(self) -> str:
-        # Underscore-prefixed files are invisible to Spark's parquet
-        # listing, so the sidecar can live inside the dataset dir.
-        import os
-
-        return os.path.join(self.target_path, "_nbuckets.json")
-
-    def _load_meta(self) -> Optional[int]:
-        """Bucket count from the layout sidecar (also restores the churn
-        EWMA, so a restarted stream resumes with its keys-per-batch
-        knowledge instead of re-learning it from scratch)."""
-        import json
-
-        try:
-            with open(self._meta_path()) as f:
-                meta = json.load(f)
-            ewma = meta.get("keys_ewma")
-            if ewma is not None:
-                self._churn.value = float(ewma)
-            return int(meta["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            return None
-
-    def _save_meta(self) -> None:
-        import json
-        import os
-
-        os.makedirs(self.target_path, exist_ok=True)
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self._meta_record(), f)
-        os.replace(tmp, self._meta_path())
-
-    def _meta_record(self) -> dict:
+    def _layout_record(self) -> dict:
         rec = {"n_buckets": int(self.n_buckets)}
         if self._churn.value is not None:
             rec["keys_ewma"] = float(self._churn.value)
         return rec
-
-    def _state_bytes(self) -> int:
-        import os
-
-        total = 0
-        for root, _dirs, files in os.walk(self.target_path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(root, fn))
-                    except OSError:
-                        pass
-        return total
 
     def _existing_buckets(self) -> list:
         import os
@@ -395,13 +362,7 @@ class DeleteAwareMerger:
     def _bucket_of(kraw_col, n: int):
         return F.pmod(F.xxhash64(kraw_col), F.lit(n)).cast("int")
 
-    # -- crash-atomic rebucket (stage → marker → swap) --------------------
-
-    def _stage_path(self) -> str:
-        return self.target_path.rstrip("/") + ".rebucket"
-
-    def _old_path(self) -> str:
-        return self.target_path.rstrip("/") + ".rebucket.old"
+    # -- crash-atomic rebucket (operators/relayout.py) ---------------------
 
     def _fault(self, point: str) -> None:
         """Test hook: raising here models process death at this point —
@@ -409,40 +370,6 @@ class DeleteAwareMerger:
         happens in the next merger's __init__ (tests/test_fault_injection)."""
         if self._rebucket_fault == point:
             raise RuntimeError(f"injected rebucket crash at {point}")
-
-    def _recover_rebucket(self) -> None:
-        """Converge a possibly-interrupted rebucket to one committed
-        generation.  The swap is two renames; every crash window leaves a
-        state this resolves deterministically:
-
-        * stage present, target present → the swap never started (staging
-          incomplete or unmarked): discard the stage; the size threshold
-          re-fires the rebucket.
-        * target missing, stage complete (has the ``_nbuckets.json``
-          marker, written only after the staged parquet finished) → crash
-          between the two renames: promote the stage.
-        * old-generation dir left behind → crash after the swap completed:
-          delete it.
-        """
-        import os
-        import shutil
-
-        stage, old = self._stage_path(), self._old_path()
-        if os.path.isdir(stage):
-            stage_complete = os.path.exists(os.path.join(stage, "_nbuckets.json"))
-            if not os.path.isdir(self.target_path) and stage_complete:
-                os.rename(stage, self.target_path)
-            else:
-                shutil.rmtree(stage, ignore_errors=True)
-        if os.path.isdir(old):
-            if not os.path.isdir(self.target_path):
-                # Defensive: target can only be missing here if a complete
-                # stage also vanished — never produced by the protocol.
-                raise RuntimeError(
-                    f"rebucket recovery: {self.target_path} missing and no "
-                    f"complete stage; previous generation at {old}"
-                )
-            shutil.rmtree(old, ignore_errors=True)
 
     def _maybe_rebucket(self) -> None:
         """Auto mode: grow the bucket count (power of two) when EITHER
@@ -456,22 +383,15 @@ class DeleteAwareMerger:
         partition assignment changes (pinned by
         test_bucketed_merger_rebucket_equivalence).
 
-        Crash-safe (r10): the relaid dataset is staged into a sibling dir,
-        marked complete by writing its ``_nbuckets.json`` sidecar LAST,
-        then swapped in with two renames.  The live dataset is never
-        overwritten in place (the r9 static overwrite deleted the target
-        before rewriting it — a kill in that window lost the state), and
-        a kill at ANY point converges via _recover_rebucket on restart.
+        Crash-safe: the relaid dataset is staged beside the live one and
+        swapped in by ``staged_relayout``; a kill at ANY point converges
+        via ``recover_relayout`` on restart.
         """
-        import os
-        import shutil
-
         from pypgcdc_spark.operators.churn import recommend_buckets
 
-        total = self._state_bytes()
         new_n = recommend_buckets(
             self.n_buckets,
-            total,
+            dataset_bytes(self.target_path),
             self.target_bucket_bytes,
             self._churn.value,
             min_buckets=self.MIN_BUCKETS,
@@ -479,36 +399,16 @@ class DeleteAwareMerger:
         )
         if new_n == self.n_buckets:
             return
-        stage, old = self._stage_path(), self._old_path()
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        self._fault("pre_stage")
-        relaid = self.spark.read.parquet(self.target_path).withColumn(
-            "_bucket", self._bucket_of(F.col("_kraw"), new_n)
+        rec = self._layout_record()
+        rec["n_buckets"] = int(new_n)
+        staged_relayout(
+            self.spark,
+            self.target_path,
+            "_bucket",
+            lambda df: df.withColumn("_bucket", self._bucket_of(F.col("_kraw"), new_n)),
+            rec,
+            fault=self._fault,
         )
-        # Reads target, writes the stage — no read-own-write lineage, no
-        # checkpoint needed, and the live dataset stays readable
-        # throughout.  Repartitioned by bucket: one file per dir.
-        relaid.repartition(F.col("_bucket")).write.partitionBy("_bucket").parquet(
-            stage
-        )
-        self._fault("pre_marker")
-        # Marker LAST: a stage dir without its sidecar is by definition
-        # incomplete and gets discarded on recovery.
-        tmp = os.path.join(stage, "_nbuckets.json.tmp")
-        with open(tmp, "w") as f:
-            import json
-
-            rec = self._meta_record()
-            rec["n_buckets"] = int(new_n)
-            json.dump(rec, f)
-        os.replace(tmp, os.path.join(stage, "_nbuckets.json"))
-        self._fault("pre_swap")
-        os.rename(self.target_path, old)
-        self._fault("mid_swap")
-        os.rename(stage, self.target_path)
-        self._fault("pre_gc")
-        shutil.rmtree(old, ignore_errors=True)
         self.rebucket_events.append((self.n_buckets, new_n))
         self.n_buckets = new_n
 
@@ -638,7 +538,7 @@ class DeleteAwareMerger:
                     ignore_errors=True,
                 )
             if self.auto:
-                self._save_meta()
+                save_layout(self.target_path, self._layout_record())
                 self._maybe_rebucket()
             return
         state = typed_state(env, self.schema)

@@ -40,8 +40,16 @@ from pypgcdc_spark.operators.dedup import (
     minhash_signatures_from_text,
 )
 from pypgcdc_spark.operators.retrieval import BM25_B, BM25_K1, BM25_QUERY, BM25_TOPK
-from pypgcdc_spark.operators.batch_guard import already_applied, mark_applied
-from pypgcdc_spark.operators.state_prune import prune_buckets, touched_buckets
+from pypgcdc_spark.operators.batch_guard import (
+    already_applied,
+    delta_step_conf,
+    mark_applied,
+)
+from pypgcdc_spark.operators.state_prune import (
+    dataset_exists,
+    prune_buckets,
+    touched_buckets,
+)
 from pypgcdc_spark.queries import load, query
 
 UPDATE_MOD, UPDATE_REM = 7, 3  # doc_id % 7 == 3 → text revised
@@ -59,16 +67,22 @@ def _shingles_of(docs: DataFrame) -> DataFrame:
     )
 
 
-class SignatureIndexMaintainer:
-    """foreachBatch maintainer of a bucketed MinHash signature table.
+class DocumentIndexMaintainer:
+    """foreachBatch delta step shared by the document indexes.
 
     State: ONE parquet dataset partitioned by ``bucket = doc_id %
-    N_SIG_BUCKETS``; rows are (doc_id, lsn, deleted, mh0..mh{N-1}).
-    Each batch: keep the max-LSN version per doc, drop rows older than
-    the already-stored LSN (out-of-order guard), re-shingle only batch
-    docs, and rewrite only touched buckets (dynamic partition overwrite).
-    Deletes leave tombstones so a late stale update cannot resurrect a
-    deleted document."""
+    n_buckets``, holding rows keyed by ``doc_id`` with the doc's ``lsn``
+    and a ``deleted`` flag.  Each batch keeps the max-LSN version per
+    doc, drops versions older than the stored LSN (out-of-order guard),
+    rebuilds rows only for the surviving batch docs, and rewrites only
+    the touched buckets (dynamic partition overwrite).  Deletes leave
+    tombstones so a late stale update cannot resurrect a deleted doc.
+
+    A subclass names its state dir and row schema and builds the new
+    rows of a batch's fresh docs in ``_replacement``."""
+
+    STATE_DIR: str
+    SCHEMA: str
 
     def __init__(
         self,
@@ -83,8 +97,8 @@ class SignatureIndexMaintainer:
         # Stream-lineage identity for the replay guard (checkpoint path):
         # batch ids reset under a fresh checkpoint (ADVICE r8).
         self.guard_id = guard_id
-        self.path = f"{work_dir}/sig_state"
-        self._has_state = False
+        self.path = f"{work_dir}/{self.STATE_DIR}"
+        self._has_state = dataset_exists(self.path)
 
     def _read_state(self, bucket_ids: list) -> DataFrame:
         """State rows of the touched buckets only, via a static ``isin``
@@ -93,10 +107,8 @@ class SignatureIndexMaintainer:
         but relied on dynamic partition pruning, which does not fire on
         this plan shape — the full state parquet was scanned every batch
         (ADVICE r7; see ``state_prune.py``)."""
-        mh_cols = ", ".join(f"mh{s} LONG" for s in range(N_MINHASH))
-        schema = f"doc_id LONG, lsn LONG, deleted BOOLEAN, {mh_cols}"
         if not self._has_state:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], self.SCHEMA)
         return prune_buckets(self.spark.read.parquet(self.path), bucket_ids).drop(
             "bucket"
         )
@@ -104,38 +116,22 @@ class SignatureIndexMaintainer:
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if already_applied(self.work, batch_id, self.guard_id):
             return  # foreachBatch replay (at-least-once): already committed
-        conf = self.spark.conf
-        # Same delta-step conf discipline as the IVM maintainers (r12):
-        # per-batch data is bucket-sized, so right-size the tiny shuffles
-        # to the bucket count, prefer hash joins (no sort), and skip
-        # AQE's per-stage materialize+replan barrier (measured ~0.7 s per
-        # 4-batch drain on the sibling BucketedViewMaintainer).
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            self._apply(batch_df, batch_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
+        with delta_step_conf(self.spark, self.n_buckets):
+            self._apply(batch_df)
+            mark_applied(self.work, batch_id, self.guard_id)
 
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _replacement(self, fresh: DataFrame) -> DataFrame:
+        """State rows for ``fresh`` (doc_id, lsn, op, text): the batch's
+        newest version of every doc that passed the LSN guard."""
+        raise NotImplementedError
+
+    def _apply(self, batch_df: DataFrame) -> None:
         bucket = F.pmod(F.col("doc_id"), F.lit(self.n_buckets)).cast("int")
 
         # The touched-bucket collect doubles as the empty probe (the
         # separate isEmpty() action cost one extra Spark job per batch).
         batch_buckets = touched_buckets(batch_df, bucket)
         if not batch_buckets:
-            mark_applied(self.work, batch_id, self.guard_id)
             return
 
         # Newest version per doc as ONE partial aggregation (max_by) —
@@ -150,14 +146,33 @@ class SignatureIndexMaintainer:
 
         # Out-of-order guard: a batch version older than the stored one
         # (including a tombstone's LSN) must not win.
-        prior = old.select("doc_id", F.col("lsn").alias("old_lsn"))
+        prior = old.groupBy("doc_id").agg(F.max("lsn").alias("old_lsn"))
         fresh = (
             latest.join(prior, "doc_id", "left")
             .filter(F.col("old_lsn").isNull() | (F.col("lsn") > F.col("old_lsn")))
             .drop("old_lsn")
             .localCheckpoint(eager=True)
         )
+        untouched = old.join(fresh.select("doc_id"), "doc_id", "left_anti")
+        new_state = (
+            untouched.unionByName(self._replacement(fresh))
+            .withColumn("bucket", bucket)
+            .localCheckpoint(eager=True)  # never read-from what we overwrite
+        )
+        new_state.write.mode("overwrite").partitionBy("bucket").parquet(self.path)
+        self._has_state = True
 
+
+class SignatureIndexMaintainer(DocumentIndexMaintainer):
+    """foreachBatch maintainer of a bucketed MinHash signature table:
+    one row (doc_id, lsn, deleted, mh0..mh{N-1}) per document."""
+
+    STATE_DIR = "sig_state"
+    SCHEMA = "doc_id LONG, lsn LONG, deleted BOOLEAN, " + ", ".join(
+        f"mh{s} LONG" for s in range(N_MINHASH)
+    )
+
+    def _replacement(self, fresh: DataFrame) -> DataFrame:
         # ONE left join replaces the r11 shape's no_sig anti-join + 3-way
         # union with per-part null padding: a fresh doc with shingles
         # picks up its mh columns, a live doc with <3 words or a
@@ -169,23 +184,11 @@ class SignatureIndexMaintainer:
         # ~6x cheaper per micro-batch than the interpreted shingle lambda.
         sigs = minhash_signatures_from_text(live)
         mh_all = [f"mh{s}" for s in range(N_MINHASH)]
-        replacement = (
+        return (
             fresh.select("doc_id", "lsn", (F.col("op") == "D").alias("deleted"))
             .join(sigs, "doc_id", "left")
             .select("doc_id", "lsn", "deleted", *mh_all)
         )
-
-        untouched_docs = old.join(
-            fresh.select("doc_id"), "doc_id", "left_anti"
-        )
-        new_state = (
-            untouched_docs.unionByName(replacement)
-            .withColumn("bucket", bucket)
-            .localCheckpoint(eager=True)  # never read-from what we overwrite
-        )
-        new_state.write.mode("overwrite").partitionBy("bucket").parquet(self.path)
-        self._has_state = True
-        mark_applied(self.work, batch_id, self.guard_id)
 
     def signatures(self) -> DataFrame:
         """Live long-layout signatures (doc_id, seed, mh) from the index."""
@@ -330,99 +333,19 @@ def cdc_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-class PostingsIndexMaintainer:
+class PostingsIndexMaintainer(DocumentIndexMaintainer):
     """foreachBatch maintainer of a bucketed full-text postings index.
 
-    State: ONE parquet dataset partitioned by ``bucket = doc_id %
-    n_buckets`` with rows (doc_id, lsn, deleted, t, f, dl) — one row per
-    (document, term) plus a dl-carrying marker row per live document and
-    tombstones for deletes.  Each batch re-tokenizes ONLY its touched
-    documents and rewrites ONLY their buckets (dynamic partition
-    overwrite) — the property that keeps a corpus-scale search index
-    maintainable under a CDC feed.  Same guards as the signature index:
-    max-LSN-per-doc within the batch, stale-LSN rejection against stored
-    state, tombstones against resurrection."""
+    Rows (doc_id, lsn, deleted, t, f, dl): one row per (document, term)
+    plus a dl-carrying marker row per live document and tombstones for
+    deletes.  Each batch re-tokenizes ONLY its touched documents — the
+    property that keeps a corpus-scale search index maintainable under a
+    CDC feed."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        work_dir: str,
-        n_buckets: int = N_SIG_BUCKETS,
-        guard_id: str = None,
-    ):
-        self.spark = spark
-        self.work = work_dir
-        self.n_buckets = n_buckets
-        # Stream-lineage identity for the replay guard (checkpoint path):
-        # batch ids reset under a fresh checkpoint (ADVICE r8).
-        self.guard_id = guard_id
-        self.path = f"{work_dir}/postings_state"
-        self._has_state = False
+    STATE_DIR = "postings_state"
+    SCHEMA = "doc_id LONG, lsn LONG, deleted BOOLEAN, t STRING, f LONG, dl LONG"
 
-    _SCHEMA = "doc_id LONG, lsn LONG, deleted BOOLEAN, t STRING, f LONG, dl LONG"
-
-    def _read_state(self, bucket_ids: list) -> DataFrame:
-        """Touched-bucket state via a static ``isin`` partition filter
-        (bounded collected bucket ids; DPP does not fire on the
-        broadcast-join shape — see ``state_prune.py``)."""
-        if not self._has_state:
-            return self.spark.createDataFrame([], self._SCHEMA)
-        return prune_buckets(self.spark.read.parquet(self.path), bucket_ids).drop(
-            "bucket"
-        )
-
-    def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if already_applied(self.work, batch_id, self.guard_id):
-            return  # foreachBatch replay (at-least-once): already committed
-        conf = self.spark.conf
-        # Same delta-step conf discipline as the IVM maintainers (r12):
-        # bucket-sized shuffles, hash joins, AQE's micro-batch replan
-        # barrier off (saved/restored).
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            self._apply(batch_df, batch_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
-
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        bucket = F.pmod(F.col("doc_id"), F.lit(self.n_buckets)).cast("int")
-
-        # The touched-bucket collect doubles as the empty probe (the
-        # separate isEmpty() action cost one extra Spark job per batch).
-        batch_buckets = touched_buckets(batch_df, bucket)
-        if not batch_buckets:
-            mark_applied(self.work, batch_id, self.guard_id)
-            return
-
-        # Newest version per doc as ONE partial aggregation (max_by) —
-        # the window/row_number form this replaces sorted every batch row
-        # (r12, the ivm.py tall-agg discipline).
-        latest = (
-            batch_df.groupBy("doc_id")
-            .agg(F.max_by(F.struct("lsn", "op", "text"), "lsn").alias("r"))
-            .select("doc_id", "r.lsn", "r.op", "r.text")
-        )
-        old = self._read_state(batch_buckets)
-        prior = old.groupBy("doc_id").agg(F.max("lsn").alias("old_lsn"))
-        fresh = (
-            latest.join(prior, "doc_id", "left")
-            .filter(F.col("old_lsn").isNull() | (F.col("lsn") > F.col("old_lsn")))
-            .drop("old_lsn")
-            .localCheckpoint(eager=True)
-        )
-
+    def _replacement(self, fresh: DataFrame) -> DataFrame:
         live = fresh.filter(F.col("op") != "D").select("doc_id", "text")
         toks = live.select(
             "doc_id",
@@ -440,20 +363,11 @@ class PostingsIndexMaintainer:
         # or a tombstone (null text → no rows in toks) gets the null
         # marker row, and `deleted` is just op='D'.  Row-for-row
         # identical state, LSN tracking included.
-        replacement = (
+        return (
             fresh.select("doc_id", "lsn", (F.col("op") == "D").alias("deleted"))
             .join(term_rows, "doc_id", "left")
             .select("doc_id", "lsn", "deleted", "t", "f", "dl")
         )
-        untouched = old.join(fresh.select("doc_id"), "doc_id", "left_anti")
-        new_state = (
-            untouched.unionByName(replacement)
-            .withColumn("bucket", bucket)
-            .localCheckpoint(eager=True)
-        )
-        new_state.write.mode("overwrite").partitionBy("bucket").parquet(self.path)
-        self._has_state = True
-        mark_applied(self.work, batch_id, self.guard_id)
 
     def live_postings(self) -> DataFrame:
         """(doc_id, t, f, dl) for live documents (marker rows excluded)."""

@@ -44,30 +44,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pypgcdc_spark.operators.state_prune import dataset_exists
+
 KEY_SCHEMA = (
     "user_id LONG, lsn LONG, event_type STRING, cents LONG, is_deleted BOOLEAN"
 )
 AGG_SCHEMA = "event_type STRING, n_keys LONG, total_cents LONG"
-
-
-def _dataset_exists(path: str) -> bool:
-    """True if the state dir holds committed parquet (not just sidecars)."""
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def _dataset_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, fn))
-                except OSError:
-                    pass
-    return total
 
 
 class BucketedViewMaintainer:
@@ -127,7 +109,7 @@ class BucketedViewMaintainer:
                 self.n_buckets = self.MIN_BUCKETS
         else:
             self.n_buckets = n_buckets
-        self._has_keys = _dataset_exists(self.key_path)
+        self._has_keys = dataset_exists(self.key_path)
         self._agg_rows: list = []
 
     # -- state accessors ------------------------------------------------
@@ -155,43 +137,17 @@ class BucketedViewMaintainer:
     # -- the per-batch delta step ---------------------------------------
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pypgcdc_spark.operators.batch_guard import already_applied, mark_applied
+        from pypgcdc_spark.operators.batch_guard import (
+            already_applied,
+            delta_step_conf,
+            mark_applied,
+        )
 
         if already_applied(self.work, batch_id, self.guard_id):
             return  # foreachBatch replay (at-least-once): already committed
-        conf = self.spark.conf
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Per-batch data is bucket-sized: right-size the tiny shuffles and
-        # prefer shuffled-hash joins (no sort) for the delta step.  Capped
-        # — churn-sized layouts run to tens of thousands of buckets, but
-        # the shuffle carries only the touched rows (~12% of state at the
-        # default churn factor), not one partition per bucket.
-        # Deliberately NOT floored at defaultParallelism: A/B'd r12
-        # (paired, min-of-3) and the wider shuffle was 5-15% SLOWER across
-        # all three IVM gate rows — per-batch data is far too small to
-        # amortize the extra task scheduling.
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        # AQE off for the delta step: the shuffle width is already sized
-        # to the bucket count above, the one aggregation has no join for
-        # skew handling to rewrite, and AQE's per-stage materialize +
-        # replan barrier is pure latency on a micro-batch (measured r12:
-        # ~0.7 s over a 4-batch drain, results identical).
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with delta_step_conf(self.spark, self.n_buckets):
             self._apply(batch_df)
             mark_applied(self.work, batch_id, self.guard_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
 
     def _apply(self, batch_df: DataFrame) -> None:
         bucket = F.pmod(F.col("user_id"), F.lit(self.n_buckets)).cast("int")
@@ -261,99 +217,35 @@ class BucketedViewMaintainer:
             F.col("new.event_type").alias("new_type"),
             F.col("new.cents").alias("new_cents"),
             F.col("new.is_deleted").alias("new_deleted"),
-        )
-        # The per-type delta fold rides W's checkpoint job via observe()
-        # — one Spark job fewer per batch (VERDICT r12 next-round #4).
-        # observe() computes scalar aggregates only, so the fold is
-        # conditional sums over the event types KNOWN at plan time (the
-        # maintained aggregate's current rows); a counter of contributions
-        # outside that set guards the fast path — a batch introducing a
-        # new (or NULL) type falls back to the exact collect job below.
-        # CollectMetrics evaluates its aggregates INTERPRETED (no codegen):
-        # the per-row conditional logic lives in codegen'd projection
-        # columns and the metrics are plain sums of those, pruned again
-        # right after observe() so the checkpoint never materializes them.
-        # Driver-cost discipline: indicators/metrics build as SQL strings
-        # (one py4j call each, parsed JVM-side) — Column algebra cost
-        # ~0.5 s/batch of py4j + re-analysis (OPTIMIZATION_r13.md §4).
-        from pyspark.sql import Observation
+        ).localCheckpoint(eager=True)
 
-        known = sorted({r[0] for r in self._agg_rows if r[0] is not None})
-        obs = Observation()
-        core = [
-            "user_id", "eff", "lsn", "event_type", "cents", "is_deleted",
-            "new_lsn", "new_type", "new_cents", "new_deleted",
-        ]
-        ret_sql = "eff AND lsn IS NOT NULL AND NOT is_deleted"
-        add_sql = "eff AND NOT new_deleted"
-        qt = lambda t: "'" + str(t).replace("'", "''") + "'"  # noqa: E731
-        if known:
-            known_sql = ", ".join(qt(t) for t in known)
-            unk = (
-                f"CASE WHEN ({ret_sql}) AND (event_type IS NULL "
-                f"OR event_type NOT IN ({known_sql})) THEN 1 "
-                f"WHEN ({add_sql}) AND (new_type IS NULL "
-                f"OR new_type NOT IN ({known_sql})) THEN 1 ELSE 0 END"
-            )
-        else:
-            unk = f"CASE WHEN ({ret_sql}) OR ({add_sql}) THEN 1 ELSE 0 END"
-        indicators = [F.expr(f"{unk} AS _unk")]
-        for i, t in enumerate(known):
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN ({ret_sql}) AND event_type = {qt(t)} "
-                f"THEN CAST(-1 AS BIGINT) END, CAST(0 AS BIGINT))"
-                f" + coalesce(CASE WHEN ({add_sql}) AND new_type = {qt(t)} "
-                f"THEN CAST(1 AS BIGINT) END, CAST(0 AS BIGINT)) AS _dk{i}"
-            ))
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN ({ret_sql}) AND event_type = {qt(t)} "
-                f"THEN -cents END, CAST(0 AS BIGINT))"
-                f" + coalesce(CASE WHEN ({add_sql}) AND new_type = {qt(t)} "
-                f"THEN new_cents END, CAST(0 AS BIGINT)) AS _dc{i}"
-            ))
-        metrics = [F.expr("sum(_unk)").alias("unknown")]
-        for i in range(len(known)):
-            metrics.append(F.expr(f"sum(_dk{i})").alias(f"dk{i}"))
-            metrics.append(F.expr(f"sum(_dc{i})").alias(f"dc{i}"))
-        w = (
-            w.select("*", *indicators)
-            .observe(obs, *metrics)
-            .select(*core)
-            .localCheckpoint(eager=True)
+        # Retract/add delta fold (bounded collect: types × counters), in
+        # ONE task over the batch-sized W (coalesce(1): no shuffle —
+        # per-batch data is far too small to amortize a shuffle stage's
+        # task scheduling).
+        retract = w.filter(
+            F.col("eff") & F.col("lsn").isNotNull() & ~F.col("is_deleted")
+        ).select(
+            "event_type",
+            F.lit(-1).cast("long").alias("n_keys"),
+            (-F.col("cents")).alias("total_cents"),
         )
-        got = obs.get  # the eager checkpoint already ran the job
-        fold_fast = not got["unknown"]
-        if fold_fast:
-            by_t = {r[0]: (int(r[1]), int(r[2])) for r in self._agg_rows}
-            for i, t in enumerate(known):
-                n0, c0 = by_t.get(t, (0, 0))
-                by_t[t] = (n0 + int(got[f"dk{i}"] or 0), c0 + int(got[f"dc{i}"] or 0))
-            folded_rows = sorted((t, n, c) for t, (n, c) in by_t.items())
-
-        # Retract/add delta fold (bounded collect: types × counters) —
-        # only built when the observe fast path could not cover the batch.
-        agg = None
-        if not fold_fast:
-            retract = w.filter(F.expr(ret_sql)).select(
-                "event_type",
-                F.lit(-1).cast("long").alias("n_keys"),
-                (-F.col("cents")).alias("total_cents"),
+        add = w.filter(F.col("eff") & ~F.col("new_deleted")).select(
+            F.col("new_type").alias("event_type"),
+            F.lit(1).cast("long").alias("n_keys"),
+            F.col("new_cents").alias("total_cents"),
+        )
+        agg = (
+            self._read_agg()
+            .unionByName(retract)
+            .unionByName(add)
+            .coalesce(1)
+            .groupBy("event_type")
+            .agg(
+                F.sum("n_keys").alias("n_keys"),
+                F.sum("total_cents").alias("total_cents"),
             )
-            add = w.filter(F.expr(add_sql)).select(
-                F.col("new_type").alias("event_type"),
-                F.lit(1).cast("long").alias("n_keys"),
-                F.col("new_cents").alias("total_cents"),
-            )
-            agg = (
-                self._read_agg()
-                .unionByName(retract)
-                .unionByName(add)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n_keys").alias("n_keys"),
-                    F.sum("total_cents").alias("total_cents"),
-                )
-            )
+        )
         # New contents of the TOUCHED buckets: applied after-images where
         # the guard passed (deletes stay as tombstones), old rows
         # otherwise — survivors ride through the same W.
@@ -392,16 +284,10 @@ class BucketedViewMaintainer:
             .partitionBy("bucket")
             .parquet(self.key_path)
         )
-        if fold_fast:
-            # Fold already observed on W's checkpoint job: the only
-            # remaining Spark job this batch is the state write.
-            write_state()
-            self._agg_rows = [tuple(r) for r in folded_rows]
-        else:
-            self._agg_rows = [
-                (r.event_type, r.n_keys, r.total_cents)
-                for r in _concurrently(lambda: agg.collect(), write_state)
-            ]
+        self._agg_rows = [
+            (r.event_type, r.n_keys, r.total_cents)
+            for r in _concurrently(lambda: agg.collect(), write_state)
+        ]
         self._has_keys = os.path.isdir(self.key_path)
         if self.auto:
             from pypgcdc_spark.operators.relayout import save_layout
@@ -429,13 +315,13 @@ class BucketedViewMaintainer:
         The bucket is a pure function of the stored ``user_id``, so the
         relaid rows are bit-identical; only partition assignment moves."""
         from pypgcdc_spark.operators.churn import recommend_buckets
-        from pypgcdc_spark.operators.relayout import staged_relayout
+        from pypgcdc_spark.operators.relayout import dataset_bytes, staged_relayout
 
         if not self._has_keys:
             return
         new_n = recommend_buckets(
             self.n_buckets,
-            _dataset_bytes(self.key_path),
+            dataset_bytes(self.key_path),
             self.target_bucket_bytes,
             self._churn.value,
             min_buckets=self.MIN_BUCKETS,

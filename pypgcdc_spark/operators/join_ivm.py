@@ -56,8 +56,10 @@ _JOIN_LOGS: dict = {}
 def _concurrently(collect_fn, write_fn):
     """Run a bounded collect and a state write as concurrent Spark jobs
     (both consume already-checkpointed blocks); returns the collect's
-    result, re-raising whichever side failed."""
-    import threading
+    result, re-raising whichever side failed.  The writer thread inherits
+    the caller's local properties, so its jobs carry the caller's job
+    group (cancellable, and counted with the batch)."""
+    from pyspark import InheritableThread
 
     err: list = []
 
@@ -67,7 +69,7 @@ def _concurrently(collect_fn, write_fn):
         except BaseException as e:  # propagate to the caller's thread
             err.append(e)
 
-    t = threading.Thread(target=_run)
+    t = InheritableThread(target=_run)
     t.start()
     try:
         rows = collect_fn()
@@ -297,40 +299,11 @@ class JoinViewMaintainer:
         # between "state committed" and "batch marked".
         if self.state.already_applied(batch_id, self.guard_id):
             return
-        spark = self.spark
-        conf = spark.conf
-        saved = {
-            k: conf.get(k)
-            for k in (
-                "spark.sql.shuffle.partitions",
-                "spark.sql.join.preferSortMergeJoin",
-                "spark.sql.adaptive.enabled",
-            )
-        }
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Per-batch data is bucket-sized: right-size the tiny shuffles to
-        # the bucket count and prefer shuffled-hash joins (no sort) —
-        # at real scale a deployment sets these to its cluster's shape.
-        # Capped: churn-sized layouts run to tens of thousands of buckets,
-        # but the shuffle carries only the touched rows.  Deliberately NOT
-        # floored at defaultParallelism: A/B'd r12 (paired, min-of-3) and
-        # the wider shuffle was 5-15% SLOWER across all three IVM gate
-        # rows — per-batch data is far too small to amortize the extra
-        # task scheduling.
-        conf.set("spark.sql.shuffle.partitions", str(min(self.n_buckets, 64)))
-        conf.set("spark.sql.join.preferSortMergeJoin", "false")
-        # AQE off for the delta step: shuffle width is already sized to
-        # the bucket count, and AQE's per-stage materialize + replan
-        # barrier is pure latency on a micro-batch (measured r12 on the
-        # sibling BucketedViewMaintainer: ~0.7 s over a 4-batch drain,
-        # results identical).
-        conf.set("spark.sql.adaptive.enabled", "false")
+        from pypgcdc_spark.operators.batch_guard import delta_step_conf
+
         bucket = (F.col("orderkey") % self.n_buckets).cast("int")
-        try:
+        with delta_step_conf(self.spark, self.n_buckets):
             self._apply(batch_df, bucket, batch_id)
-        finally:
-            for k, v in saved.items():
-                conf.set(k, v)
 
     def _apply(self, batch_df: DataFrame, bucket, batch_id: int) -> None:
         from pypgcdc_spark.operators.churn import touched_buckets_and_keys
@@ -420,88 +393,11 @@ class JoinViewMaintainer:
             F.coalesce("db_n", F.lit(0)).alias("dn"),
             F.coalesce("db_cents", F.lit(0)).alias("dc"),
         )
-        # The per-priority delta fold rides W's checkpoint job itself via
-        # observe() — one Spark job fewer per batch (VERDICT r12 next-round
-        # #4; the q15/CC-convergence trick applied to the maintainer).
-        # observe() can only compute scalar aggregates, so the fold is
-        # expressed as conditional sums over the priorities KNOWN at plan
-        # time (the maintained aggregate's current rows); a counter of
-        # delta contributions outside that set (or with a NULL current
-        # priority) guards the fast path — when it fires (first batch, or
-        # a batch introducing a new priority) the fold falls back to the
-        # exact collect job below, so the observe path never has to guess.
-        # CollectMetrics evaluates its aggregates INTERPRETED (no codegen),
-        # so the per-row conditional logic lives in codegen'd projection
-        # columns below W's select and the metrics are plain sums of those
-        # columns; a select right after observe() prunes them again before
-        # the checkpoint materializes (measured: deep when-trees inside the
-        # metrics cost ~0.5 s/batch at sf0.1; as projections they are
-        # noise).
-        # Driver-cost discipline: the whole indicator/metric graph builds
-        # as SQL strings (one py4j call per expression, parsed JVM-side) —
-        # the Column-algebra form cost ~0.5-0.8 s of py4j round-trips and
-        # re-analysis PER BATCH, eating the saved job (measured; see
-        # OPTIMIZATION_r13.md §4).
-        from pyspark.sql import Observation
-
-        known = sorted({r[0] for r in self._agg_rows if r[0] is not None})
-        obs = Observation()
-        core = [
-            "orderkey", "eff", "cur_priority", "cur_custkey", "cur_lsn",
-            "old_priority", "b_n0", "b_c0", "dn", "dc",
-        ]
-        qp = lambda p: "'" + str(p).replace("'", "''") + "'"  # noqa: E731
-        if known:
-            known_sql = ", ".join(qp(p) for p in known)
-            unk = (
-                "CASE WHEN eff AND old_priority IS NOT NULL "
-                f"AND old_priority NOT IN ({known_sql}) THEN 1 "
-                "WHEN eff AND (cur_priority IS NULL "
-                f"OR cur_priority NOT IN ({known_sql})) THEN 1 "
-                "WHEN dn > 0 AND cur_priority IS NOT NULL "
-                f"AND cur_priority NOT IN ({known_sql}) THEN 1 ELSE 0 END"
-            )
-        else:
-            unk = (
-                "CASE WHEN eff THEN 1 "
-                "WHEN dn > 0 AND cur_priority IS NOT NULL THEN 1 ELSE 0 END"
-            )
-        indicators = [F.expr(f"{unk} AS _unk")]
-        for i, p in enumerate(known):
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN eff AND old_priority = {qp(p)} THEN -b_n0 END, 0)"
-                f" + coalesce(CASE WHEN eff AND cur_priority = {qp(p)} THEN b_n0 END, 0)"
-                f" + coalesce(CASE WHEN dn > 0 AND cur_priority = {qp(p)} THEN dn END, 0)"
-                f" AS _dn{i}"
-            ))
-            indicators.append(F.expr(
-                f"coalesce(CASE WHEN eff AND old_priority = {qp(p)} THEN -b_c0 END, 0)"
-                f" + coalesce(CASE WHEN eff AND cur_priority = {qp(p)} THEN b_c0 END, 0)"
-                f" + coalesce(CASE WHEN dn > 0 AND cur_priority = {qp(p)} THEN dc END, 0)"
-                f" AS _dc{i}"
-            ))
-        metrics = [F.expr("sum(_unk)").alias("unknown")]
-        for i in range(len(known)):
-            metrics.append(F.expr(f"sum(_dn{i})").alias(f"dn{i}"))
-            metrics.append(F.expr(f"sum(_dc{i})").alias(f"dc{i}"))
-        w = (
-            w.select("*", *indicators)
-            .observe(obs, *metrics)
-            .select(*core)
-            .localCheckpoint(eager=True)
-        )
         # W materializes exactly ONCE (a cache/persist would let the
         # union branches below race the first fill and recompute the
         # aggregation concurrently); the checkpoint also severs lineage
         # on the state path, so the overwrite below is hazard-free.
-        got = obs.get  # checkpoint job already ran — no extra action
-        fold_fast = not got["unknown"]
-        if fold_fast:
-            by_p = {r[0]: (int(r[1]), int(r[2])) for r in self._agg_rows}
-            for i, p in enumerate(known):
-                n0, c0 = by_p.get(p, (0, 0))
-                by_p[p] = (n0 + int(got[f"dn{i}"] or 0), c0 + int(got[f"dc{i}"] or 0))
-            folded_rows = sorted((p, n, c) for p, (n, c) in by_p.items())
+        w = w.localCheckpoint(eager=True)
 
         a_new = w.filter(F.col("cur_priority").isNotNull()).select(
             "orderkey",
@@ -526,49 +422,46 @@ class JoinViewMaintainer:
                 F.col("eff") & F.col("old_priority").isNotNull(),
                 F.struct(
                     F.col("old_priority").alias("priority"),
-                    (-F.col("b_n0")).alias("d_n"),
-                    (-F.col("b_c0")).alias("d_cents"),
+                    (-F.col("b_n0")).alias("n_lines"),
+                    (-F.col("b_c0")).alias("total_cents"),
                 ),
             ),
             F.when(
                 F.col("eff"),
                 F.struct(
                     F.col("cur_priority").alias("priority"),
-                    F.col("b_n0").alias("d_n"),
-                    F.col("b_c0").alias("d_cents"),
+                    F.col("b_n0").alias("n_lines"),
+                    F.col("b_c0").alias("total_cents"),
                 ),
             ),
             F.when(
                 F.col("cur_priority").isNotNull() & (F.col("dn") > 0),
                 F.struct(
                     F.col("cur_priority").alias("priority"),
-                    F.col("dn").alias("d_n"),
-                    F.col("dc").alias("d_cents"),
+                    F.col("dn").alias("n_lines"),
+                    F.col("dc").alias("total_cents"),
                 ),
             ),
         )
-        agg_new = None
-        if not fold_fast:
-            deltas = (
-                w.select(F.explode(contrib).alias("c"))
-                .filter(F.col("c").isNotNull())
-                .select("c.priority", "c.d_n", "c.d_cents")
-                .groupBy("priority")
-                .agg(F.sum("d_n").alias("d_n"), F.sum("d_cents").alias("d_cents"))
+        # The new aggregate: old rows plus the batch's deltas, summed per
+        # priority in ONE task over the batch-sized W (coalesce(1): no
+        # shuffle — per-batch data is far too small to amortize a shuffle
+        # stage's task scheduling).
+        deltas = (
+            w.select(F.explode(contrib).alias("c"))
+            .filter(F.col("c").isNotNull())
+            .select("c.*")
+        )
+        agg_new = (
+            self._read_agg()
+            .unionByName(deltas)
+            .coalesce(1)
+            .groupBy("priority")
+            .agg(
+                F.sum("n_lines").alias("n_lines"),
+                F.sum("total_cents").alias("total_cents"),
             )
-            agg_new = (
-                self._read_agg()
-                .join(deltas, "priority", "full_outer")
-                .select(
-                    "priority",
-                    (F.coalesce("n_lines", F.lit(0)) + F.coalesce("d_n", F.lit(0))).alias(
-                        "n_lines"
-                    ),
-                    (
-                        F.coalesce("total_cents", F.lit(0)) + F.coalesce("d_cents", F.lit(0))
-                    ).alias("total_cents"),
-                )
-            )
+        )
         # -- single commit: A-rows and B-sums (narrow projections of the
         # checkpointed W) union into one frame; ONE dynamic partition
         # overwrite replaces exactly the touched partitions.
@@ -597,25 +490,18 @@ class JoinViewMaintainer:
         # Commit: staged data is invisible until the manifest swap below —
         # state rows, batch marker AND the new aggregate commit in ONE
         # atomic rename, so a crash anywhere in this function re-applies
-        # the batch against the OLD state (no double-count window).
-        # Fast path (steady batches): the fold already rode W's checkpoint
-        # job, so the only remaining Spark job is the staging write.
-        # Fallback (new/NULL priority seen): the exact delta fold runs as a
-        # bounded collect concurrent with the write, as before.
+        # the batch against the OLD state (no double-count window).  The
+        # delta fold runs as a bounded collect concurrent with the staging
+        # write; both stream from the checkpointed W.
         touched = [(t, b) for t in ("A", "B") for b in batch_buckets]
-        if fold_fast:
-            rows = [tuple(r) for r in folded_rows]
-            staged_one = self.state.stage(unified, batch_id)
-        else:
-            staged: list = []
-            rows = _concurrently(
-                lambda: agg_new.collect(),
-                lambda: staged.append(self.state.stage(unified, batch_id)),
-            )
-            rows = [(r.priority, r.n_lines, r.total_cents) for r in rows]
-            staged_one = staged[0] if staged else None
+        staged: list = []
+        rows = _concurrently(
+            lambda: agg_new.collect(),
+            lambda: staged.append(self.state.stage(unified, batch_id)),
+        )
+        rows = [(r.priority, r.n_lines, r.total_cents) for r in rows]
         self.state.finalize(
-            staged_one,
+            staged[0],
             touched,
             batch_id,
             self.guard_id,

@@ -1,8 +1,8 @@
 """Crash-atomic relayout of a bucket-partitioned parquet state dataset.
 
-The generic form of ``DeleteAwareMerger._maybe_rebucket``'s staged swap
-(cdc/apply.py), for maintainers whose state lives as ONE plain parquet
-dataset partitioned by a bucket column (operators/ivm.py).  Protocol:
+The one implementation, used by ``ivm`` and ``cdc.apply``, for state
+that lives as ONE plain parquet dataset partitioned by a bucket column
+(``BucketedViewMaintainer``, ``DeleteAwareMerger``).  Protocol:
 
 * relaid rows are staged into a sibling ``<path>.rebucket`` dir — the
   live dataset is never written in place and stays readable throughout;
@@ -11,8 +11,14 @@ dataset partitioned by a bucket column (operators/ivm.py).  Protocol:
   and gets discarded on recovery);
 * the swap is two renames (live → ``<path>.rebucket.old``, stage →
   live); :func:`recover_relayout` converges every crash window back to
-  exactly one committed generation — same crash matrix as the merger's,
-  pinned there by test_bucketed_merger_rebucket_crashes.
+  exactly one committed generation (pinned by test_rebucket_chaos and
+  test_churn_adaptive):
+
+  - stage present, live present → the swap never started: discard the
+    stage; the growth rule re-fires the relayout;
+  - live missing, stage complete → crash between the two renames:
+    promote the stage;
+  - old generation left behind → crash after the swap: delete it.
 
 ManifestState-backed maintainers don't use this module: their relayout
 commits through the manifest protocol itself
@@ -37,6 +43,20 @@ def _stage(path: str) -> str:
 
 def _old(path: str) -> str:
     return path.rstrip("/") + ".rebucket.old"
+
+
+def dataset_bytes(path: str) -> int:
+    """Bytes of committed parquet under ``path`` (the volume the bucket
+    growth rule sizes against)."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for fn in files:
+            if fn.endswith(".parquet"):
+                try:
+                    total += os.path.getsize(os.path.join(root, fn))
+                except OSError:
+                    pass
+    return total
 
 
 def load_layout(path: str) -> Optional[dict]:

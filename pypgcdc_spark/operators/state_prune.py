@@ -25,9 +25,18 @@ static path strictly better here, and it is the one the maintainers use
 
 from __future__ import annotations
 
+import os
 from typing import List
 
 from pyspark.sql import Column, DataFrame
+
+
+def dataset_exists(path: str) -> bool:
+    """True if the state dir holds committed parquet (not just sidecars)."""
+    for _root, _dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
 
 
 def touched_buckets(batch_df: DataFrame, bucket: Column) -> List[int]:

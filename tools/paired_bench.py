@@ -5,13 +5,19 @@ clocks (BENCH_rN.json vs BENCH_rN+1.json) confound code changes with
 host state.  This tool removes the confound the same way the decode
 microbench does — by interleaving the two contenders in time:
 
-* a git worktree of the OLD round's commit and the CURRENT tree each get
-  a long-lived runner subprocess with a warm Spark session;
+* an exported copy of the OLD commit and the CURRENT tree each get a
+  long-lived runner subprocess with a warm Spark session;
 * for every query the two runners execute back-to-back, repeated
-  ``--reps`` times (old, new, old, new, ...), so both sides see the same
-  host conditions within seconds of each other;
-* per query we record min-of-reps for both sides and the new/old ratio
-  (<1 = current code faster).
+  ``--reps`` times, and the side that runs first alternates per rep
+  (old-new, new-old, ...), so neither side always runs on the host the
+  other just warmed;
+* per query we record, for both sides, every rep, the min, the median
+  and the quartile spread (q3 - q1), plus the new/old ratios of mins and
+  of medians (<1 = current code faster), how many paired reps the
+  current code won, and how many reps failed on each side.
+
+A change is within noise on a query when its median is no slower than
+the old median plus the old quartile spread.
 
 Usage:
     python tools/paired_bench.py --old <commit> [--out BENCH_r6_paired.json]
@@ -25,6 +31,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -139,6 +147,16 @@ class Runner:
             self.proc.kill()
 
 
+def _summary(reps: list) -> dict:
+    """min, median and quartile spread (q3 - q1) of one side's reps."""
+    q1, _, q3 = statistics.quantiles(reps, n=4) if len(reps) > 1 else reps * 3
+    return {
+        "min": min(reps),
+        "median": statistics.median(reps),
+        "iqr": round(q3 - q1, 3),
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--old", required=True, help="git commit/tag of the OLD side")
@@ -158,12 +176,10 @@ def main() -> None:
     )
 
     old_tree = tempfile.mkdtemp(prefix="paired_old_")
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", old_tree, args.old],
-        cwd=REPO,
-        check=True,
-        capture_output=True,
-    )
+    archive = subprocess.run(
+        ["git", "archive", args.old], cwd=REPO, check=True, capture_output=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", old_tree], input=archive, check=True)
     try:
         old = Runner(old_tree, "old")
         new = Runner(REPO, "new")
@@ -173,35 +189,49 @@ def main() -> None:
 
         per_query = {}
         for q in names:
-            olds, news = [], []
-            for _ in range(args.reps):
-                t_o = old.run(q, args.sf)
-                t_n = new.run(q, args.sf)
-                if t_o is not None:
-                    olds.append(t_o)
-                if t_n is not None:
-                    news.append(t_n)
+            olds, news, wins = [], [], 0
+            failed = {"old": 0, "new": 0}
+            for rep in range(args.reps):
+                order = [("old", old), ("new", new)]
+                if rep % 2:
+                    order.reverse()
+                t = {side: r.run(q, args.sf) for side, r in order}
+                for side, reps in (("old", olds), ("new", news)):
+                    if t[side] is None:
+                        failed[side] += 1
+                    else:
+                        reps.append(t[side])
+                if None not in t.values() and t["new"] < t["old"]:
+                    wins += 1
+            entry = {"old_reps": olds, "new_reps": news, "failed": failed}
             if olds and news:
-                o, n = min(olds), min(news)
-                per_query[q] = {
-                    "old": o,
-                    "new": n,
-                    "ratio": round(n / o, 3),
-                    "old_reps": olds,
-                    "new_reps": news,
-                }
-                print(f"{q}: old {o:.2f}s new {n:.2f}s ratio {n/o:.2f}", flush=True)
+                o, n = _summary(olds), _summary(news)
+                entry.update(
+                    old=o["min"],
+                    new=n["min"],
+                    ratio=round(n["min"] / o["min"], 3),
+                    median_ratio=round(n["median"] / o["median"], 3),
+                    old_median=o["median"],
+                    new_median=n["median"],
+                    old_iqr=o["iqr"],
+                    new_iqr=n["iqr"],
+                    new_wins=wins,
+                    within_noise=n["median"] <= o["median"] + o["iqr"],
+                )
+                print(
+                    f"{q}: median old {o['median']:.2f}s new {n['median']:.2f}s "
+                    f"(old iqr {o['iqr']:.2f}s) ratio {entry['median_ratio']:.2f} "
+                    f"wins {wins}/{args.reps} failed {failed}",
+                    flush=True,
+                )
             else:
-                per_query[q] = {"old": olds or None, "new": news or None, "ratio": None}
-                print(f"{q}: FAILED old={olds} new={news}", flush=True)
+                entry["ratio"] = None
+                print(f"{q}: FAILED old={olds} new={news} failed={failed}", flush=True)
+            per_query[q] = entry
         old.quit()
         new.quit()
     finally:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", old_tree],
-            cwd=REPO,
-            capture_output=True,
-        )
+        shutil.rmtree(old_tree, ignore_errors=True)
 
     ok = {q: v for q, v in per_query.items() if v.get("ratio") is not None}
     headline_ok = [q for q in bench.HEADLINE if q in ok]
@@ -217,8 +247,10 @@ def main() -> None:
         "headline_ratio": round(suite_new / suite_old, 3) if suite_old else None,
         "queries": per_query,
         "note": (
-            "old and new executed interleaved (old,new,old,new) per query in "
-            "one host window; min-of-reps per side; ratio<1 = current faster"
+            "old and new executed interleaved per query in one host window, "
+            "first side alternating per rep; old/new = min of reps; ratio = "
+            "new/old min, median_ratio = new/old median, <1 = current faster; "
+            "within_noise = new median <= old median + old quartile spread"
         ),
     }
     with open(os.path.join(REPO, args.out), "w") as f:
