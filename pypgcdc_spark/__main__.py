@@ -52,10 +52,8 @@ def main(argv=None) -> int:
         ap.error("--log (or PYPGCDC_LOG) is required")
 
     from pypgcdc_spark.api import PgCdcEngine
-    from pypgcdc_spark.cdc import pgoutput as pg
-    from pypgcdc_spark.cdc.registry import SchemaRegistry
     from pypgcdc_spark.session import get_spark
-    from pypgcdc_spark.sources.replay import TxBoundaryScanner, scan_frames
+    from pypgcdc_spark.sources.pgcdc import scan_log
 
     spark = get_spark("pypgcdc-cli", cpus=args.cpus or None)
     engine = PgCdcEngine(spark)
@@ -70,27 +68,7 @@ def main(argv=None) -> int:
         ap.error("--out (or PYPGCDC_OUT) is required unless --show-envelope")
     ckpt_root = args.checkpoint or os.path.join(args.out, "_checkpoint")
 
-    # Retention clamp (r9): bytes below the retained window were GC'd
-    # under the consumer ack; schema for relations whose R frames left
-    # with their segments restores from the registry snapshot sidecar.
-    from pypgcdc_spark.sources.pgcdc import _newest_registry_snapshot
-    from pypgcdc_spark.sources.replay import log_min_pos
-
-    start = log_min_pos(args.log)
-    registry = (
-        _newest_registry_snapshot(args.log, "replay") if start > 0 else None
-    ) or SchemaRegistry()
-    # Prefix scan (R frames still read whole) + in-segment tracking: a
-    # v2 log's mid-stream Relation carries an xid prefix, which a naive
-    # decode_relation(payload) would misparse as the relation OID.
-    scanner = TxBoundaryScanner()
-    for fr in scan_frames(args.log, start, prefix_bytes=64):
-        if fr.payload[:1] == b"R":
-            registry.register_relation(
-                pg.decode_relation(fr.payload, streamed=scanner.in_segment),
-                lsn=fr.lsn,
-            )
-        scanner.feed(fr)
+    registry, _ = scan_log(args.log)
     tables = registry.tables()
     if not tables:
         print("no Relation messages in log; nothing to materialize", file=sys.stderr)

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from pypgcdc_spark.cdc.apply import DeleteAwareMerger, current_state, typed_state
 from pypgcdc_spark.cdc.models import TableSchema
-from pypgcdc_spark.sources.pgcdc import PgCdcDataSource
+from pypgcdc_spark.sources.pgcdc import PgCdcDataSource, scan_log
 
 
 def _copy_unescape_col(c):
@@ -116,19 +116,7 @@ class PgCdcEngine:
     def register_cdc_views(self, log_path: str, prefix: str = "") -> list:
         """Register the envelope plus a typed current-state view per table
         found in the log; returns the view names."""
-        from pypgcdc_spark.cdc import pgoutput as pg
-        from pypgcdc_spark.cdc.registry import SchemaRegistry
-        from pypgcdc_spark.sources.replay import TxBoundaryScanner, scan_frames
-
-        registry = SchemaRegistry()
-        scanner = TxBoundaryScanner()  # v2 in-segment R frames carry an xid
-        for fr in scan_frames(log_path):
-            if fr.payload[:1] == b"R":
-                registry.register_relation(
-                    pg.decode_relation(fr.payload, streamed=scanner.in_segment),
-                    lsn=fr.lsn,
-                )
-            scanner.feed(fr)
+        registry, _ = scan_log(log_path)
         env = self.snapshot(log_path)
         env.createOrReplaceTempView(f"{prefix}cdc_envelope")
         names = [f"{prefix}cdc_envelope"]

@@ -518,12 +518,11 @@ class DeleteAwareMerger:
             # plan reads the same path it overwrites).  Repartitioned by
             # the bucket column so the write emits one file per touched
             # dir, not tasks x dirs tiny files (r12 dir-cost probe: 12x).
-            self.spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            state.repartition(F.col("_bucket")).write.mode("overwrite").partitionBy(
-                "_bucket"
-            ).parquet(self.target_path)
+            # Dynamic overwrite is a write option, so the session (and a
+            # static-overwrite merger sharing it) keeps its own mode.
+            state.repartition(F.col("_bucket")).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("_bucket").parquet(self.target_path)
             # Dynamic overwrite only replaces partitions PRESENT in the
             # written data.  A touched bucket with zero surviving rows
             # (batch deleted its every key, or a truncate emptied it)

@@ -645,9 +645,7 @@ def cdc_schema_evolution_typed(spark, sf_dir):
     from pyspark.sql import types as T
 
     from pypgcdc_spark.cdc import pgoutput as pg
-    from pypgcdc_spark.cdc.registry import SchemaRegistry
-    from pypgcdc_spark.sources import replay
-    from pypgcdc_spark.sources.pgcdc import PgCdcDataSource
+    from pypgcdc_spark.sources.pgcdc import PgCdcDataSource, scan_log
     from pypgcdc_spark.sources.replay import ReplayLogWriter
 
     (events,) = load(spark, sf_dir, "events")
@@ -706,10 +704,7 @@ def cdc_schema_evolution_typed(spark, sf_dir):
         w.close()
 
         # Version spans from frame-header metadata (public registry path).
-        reg = SchemaRegistry()
-        for fr in replay.scan_frames(log):
-            if fr.payload[:1] == b"R":
-                reg.register_relation(pg.decode_relation(fr.payload), lsn=fr.lsn)
+        reg, _ = scan_log(log)
         chain = reg._versions[(reg.database, relid)]
         spans = [
             (v.version, v.first_lsn, chain[k + 1].first_lsn if k + 1 < len(chain) else None, v.schema)

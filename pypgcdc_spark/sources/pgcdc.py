@@ -52,10 +52,14 @@ processes ONE ``latestOffset`` cut and stops, so combined with
 ``maxTxPerBatch`` it under-drains; use ``processAllAvailable()`` (as
 ``PgCdcEngine.materialize(..., drain=True)`` does) for full drains.
 
-Scale notes: the driver only scans frame *headers* to find boundaries;
-payload decode happens executor-side, parallel across transactions
-(``numPartitions`` splits each batch at tx boundaries — already more
-parallel than the reference's single thread).  A production deployment
+Scale notes: the driver reads each frame of the log once, and only its
+first 64 payload bytes (``Relation`` frames whole).  That one pass
+(:func:`scan_log`; the stream reader runs it incrementally) folds the
+schema registry and finds the whole-transaction ranges; partitions are
+planned from those ranges, never by re-reading the log.  Payload decode
+happens executor-side, parallel across transactions (``numPartitions``
+splits each batch at tx boundaries — already more parallel than the
+reference's single thread).  A production deployment
 points the same reader at a live replication socket (one tailer writes the
 log; see ``pgwire.WireReplicationTailer``), making the log both the replay buffer and
 the at-least-once boundary.
@@ -63,11 +67,13 @@ the at-least-once boundary.
 
 from __future__ import annotations
 
+import bisect
 import json
+import operator
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Iterator, List, Sequence, Tuple
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -76,10 +82,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from pypgcdc_spark.cdc import pgoutput as pg
 from pypgcdc_spark.cdc.models import ENVELOPE_DDL
 from pypgcdc_spark.cdc.registry import SchemaRegistry
 from pypgcdc_spark.cdc.transform import MessageTransformer
 from pypgcdc_spark.sources import replay
+
+_end = operator.itemgetter(1)  # bisect key over sorted (start, end) ranges
 
 
 @dataclass
@@ -113,7 +122,8 @@ def _read_range(part: TxRangePartition) -> Iterator[Tuple]:
         except (ValueError, LookupError, IndexError, UnicodeDecodeError):
             # Corrupt/unknown frame. Default is fail-fast (a CDC gap is
             # data loss); option onDecodeError=skip trades completeness
-            # for liveness and is surfaced in the transform stats.
+            # for liveness.  Skipped frames are NOT counted anywhere yet
+            # (ROADMAP direction 4 turns them into dead-letter rows).
             if part.on_decode_error == "skip":
                 continue
             raise
@@ -123,23 +133,15 @@ def _read_range(part: TxRangePartition) -> Iterator[Tuple]:
 
 def _plan_partitions(
     path: str,
-    start_pos: int,
-    end_pos: int,
+    ranges: Sequence[Tuple[int, int]],
     registry_json: str,
     database: str,
     num_partitions: int,
     on_decode_error: str = "fail",
     emit_messages: bool = False,
 ) -> Sequence[TxRangePartition]:
-    """Split [start_pos, end_pos) into ≤ num_partitions contiguous chunks
-    that each hold whole transactions."""
-    if start_pos >= end_pos:
-        return []
-    ranges = [
-        (s, e)
-        for s, e in replay.tx_boundaries(path, start_pos)
-        if e <= end_pos
-    ]
+    """Group contiguous whole-transaction ``ranges`` into ≤ num_partitions
+    chunks of similar byte size."""
     if not ranges:
         return []
     total = ranges[-1][1] - ranges[0][0]
@@ -191,6 +193,46 @@ def _newest_registry_snapshot(path: str, database: str):
     return reg
 
 
+def _scan_units(
+    path: str,
+    start_pos: int,
+    registry: SchemaRegistry,
+    scanner: replay.TxBoundaryScanner,
+) -> Iterator[Tuple[replay.Frame, Optional[Tuple[int, int]]]]:
+    """The driver's one pass over the log: prefix-scan frames from
+    ``start_pos`` (≤64 payload bytes each, 'R' frames whole), fold
+    Relation frames into ``registry`` and feed ``scanner``.  Yields each
+    frame with the whole-transaction range it closes (None if none)."""
+    for fr in replay.scan_frames(path, start_pos, prefix_bytes=64):
+        if fr.payload[:1] == b"R":
+            # In-segment R frames carry the v2 xid prefix.
+            registry.register_relation(
+                pg.decode_relation(fr.payload, streamed=scanner.in_segment),
+                lsn=fr.lsn,
+            )
+        yield fr, scanner.feed(fr)
+
+
+def scan_log(
+    path: str, database: str = "replay"
+) -> Tuple[SchemaRegistry, List[Tuple[int, int]]]:
+    """Registry and whole-transaction ranges of the retained log, from
+    ``log_min_pos`` up (bytes below were GC'd under the consumer ack,
+    like recycled WAL).  Relations whose R frames left with their
+    segments come from the newest registry snapshot sidecar."""
+    start = replay.log_min_pos(path)
+    registry = (
+        _newest_registry_snapshot(path, database) if start > 0 else None
+    ) or SchemaRegistry(database=database)
+    scanner = replay.TxBoundaryScanner()
+    ranges = [
+        closed
+        for _, closed in _scan_units(path, start, registry, scanner)
+        if closed is not None
+    ]
+    return registry, ranges
+
+
 class PgCdcStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.path = options.get("path")
@@ -237,7 +279,8 @@ class PgCdcStreamReader(DataSourceStreamReader):
         self._registry = SchemaRegistry(database=self.database)
         self._persisted_rev = 0  # highest registry snapshot on disk
         self._last_lsn = 0
-        self._pending: List[Tuple[int, int]] = []  # whole-tx ranges not yet offered
+        # Closed whole-tx ranges, kept until partitions() has planned past them.
+        self._pending: List[Tuple[int, int]] = []
         # Persistent boundary scanner: open stream/prepared spans live in
         # its state, so each tick feeds only NEW frames — the earlier
         # rewind-to-open-unit-start design re-scanned the whole open span
@@ -295,9 +338,12 @@ class PgCdcStreamReader(DataSourceStreamReader):
             # The Relation frames below the retained window are gone with
             # their segments; schema durability lives in the registry
             # snapshot sidecar (persisted by whichever consumer's acks
-            # drove the GC — GC never happens without one).
+            # drove the GC — GC never happens without one).  A live PG
+            # walsender would resend Relation messages instead.
             if self._registry.revision == 0:
-                self._seed_registry_from_snapshot()
+                seed = _newest_registry_snapshot(self.path, self.database)
+                if seed is not None:
+                    self._registry, self._persisted_rev = seed, seed.revision
         if self._scanned_pos and self._tail_rewritten(size):
             # The tailer truncated/rewrote the open tail.  Rewind to the
             # open unit's start — the last closed boundary, where scanner
@@ -321,21 +367,10 @@ class PgCdcStreamReader(DataSourceStreamReader):
             self._log_id = ""
         if size <= self._scanned_pos:
             return
-        # Prefix scan: boundary detection touches ≤38 payload bytes per
-        # frame (full read only for rare 'R' frames), so the driver's
-        # cost per frame is flat no matter how wide the replicated rows
-        # are — executors read full payloads for their own ranges only.
         last = None
-        for fr in replay.scan_frames(self.path, self._scanned_pos, prefix_bytes=64):
-            if fr.payload[:1] == b"R":
-                from pypgcdc_spark.cdc import pgoutput as pg
-
-                # In-segment R frames carry the v2 xid prefix.
-                self._registry.register_relation(
-                    pg.decode_relation(fr.payload, streamed=self._scanner.in_segment),
-                    lsn=fr.lsn,
-                )
-            closed = self._scanner.feed(fr)
+        for fr, closed in _scan_units(
+            self.path, self._scanned_pos, self._registry, self._scanner
+        ):
             if closed is not None:
                 self._pending.append(closed)
                 self._last_lsn = fr.lsn
@@ -418,16 +453,6 @@ class PgCdcStreamReader(DataSourceStreamReader):
     def _registry_dir(self) -> str:
         return self.path + ".registry.d"
 
-    def _seed_registry_from_snapshot(self) -> None:
-        """Restore schema knowledge from the newest persisted registry
-        snapshot — the fresh-consumer-on-a-GC'd-log path (a live PG
-        walsender would resend Relation messages at stream start; the
-        replay log's durable twin is the snapshot sidecar)."""
-        reg = _newest_registry_snapshot(self.path, self.database)
-        if reg is not None:
-            self._registry = reg
-            self._persisted_rev = reg.revision
-
     def _persist_registry(self) -> None:
         rev = self._registry.revision
         if rev <= self._persisted_rev:
@@ -493,30 +518,52 @@ class PgCdcStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         self._scan_forward()
-        # Drop tx ranges the checkpoint already covers (restart catch-up).
-        if self._offset_floor:
-            self._pending = [r for r in self._pending if r[1] > self._offset_floor]
-        if not self._pending:
+        # Ranges the checkpoint already covers (restart catch-up) are never
+        # offered again; every range stays pending until partitions().
+        seen = bisect.bisect_right(self._pending, self._offset_floor, key=_end)
+        offer = self._pending[seen:]
+        if not offer:
             cut = max(self._safe_cut(), self._offset_floor)
-        elif self.max_tx and len(self._pending) > self.max_tx:
-            cut = self._pending[self.max_tx - 1][1]
-            self._pending = self._pending[self.max_tx :]
+        elif self.max_tx and len(offer) > self.max_tx:
+            cut = offer[self.max_tx - 1][1]
         else:
-            cut = self._pending[-1][1]
-            self._pending = []
+            cut = offer[-1][1]
         self._offset_floor = max(self._offset_floor, cut)
         return self._offset(cut)
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        start_pos, end_pos = int(start["pos"]), int(end["pos"])
         # The checkpointed start offset is authoritative: never re-offer
         # anything at or below it.
-        self._offset_floor = max(self._offset_floor, int(start["pos"]))
+        self._offset_floor = max(self._offset_floor, start_pos)
+        if start_pos == 0:
+            # A fresh consumer's first batch starts where the retained
+            # window starts (the scan clamps the same way).
+            start_pos = replay.log_min_pos(self.path)
+        if start_pos >= end_pos:
+            return []
+        if end_pos > self._scanned_pos:
+            # Only a fresh reader replaying a checkpointed batch (restart)
+            # has not scanned this far yet.
+            self._scan_forward()
+        lo = bisect.bisect_right(self._pending, start_pos, key=_end)
+        hi = bisect.bisect_right(self._pending, end_pos, key=_end)
+        ranges = self._pending[lo:hi]
+        # Ranges below this batch are done; its own stay until the next
+        # batch, so planning the same batch again gives the same result.
+        del self._pending[:lo]
+        starts = [start_pos] + [e for _, e in ranges]
+        if [s for s, _ in ranges] + [end_pos] != starts:
+            raise ValueError(
+                f"pgcdc: whole-transaction ranges of {self.path} do not tile "
+                f"[{start_pos}, {end_pos}): an offset is off a tx boundary, lies "
+                "below a batch this reader planned, or the log changed below it"
+            )
         ref = self._offset_registry_ref(end) or self._offset_registry_ref(start)
         registry_json = ref if isinstance(ref, str) else self._registry_ref_at(ref)
         return _plan_partitions(
             self.path,
-            int(start["pos"]),
-            int(end["pos"]),
+            ranges,
             registry_json,
             self.database,
             self.num_partitions,
@@ -807,31 +854,11 @@ class PgCdcBatchReader(DataSourceReader):
         ).lower() in ("true", "1", "yes")
 
     def partitions(self) -> Sequence[InputPartition]:
-        # Retention clamp: a batch read covers the RETAINED window (bytes
-        # below were GC'd under the consumer ack, like recycled WAL);
-        # schema for relations whose R frames left with their segments
-        # restores from the registry snapshot sidecar.
-        start = replay.log_min_pos(self.path)
-        registry = (
-            _newest_registry_snapshot(self.path, self.database)
-            if start > 0
-            else None
-        ) or SchemaRegistry(database=self.database)
-        from pypgcdc_spark.cdc import pgoutput as pg
-
-        scanner = replay.TxBoundaryScanner()
-        for fr in replay.scan_frames(self.path, start):
-            if fr.payload[:1] == b"R":
-                registry.register_relation(
-                    pg.decode_relation(fr.payload, streamed=scanner.in_segment),
-                    lsn=fr.lsn,
-                )
-            scanner.feed(fr)
-        size = replay.log_size(self.path)
+        # A batch read covers the retained window (see scan_log).
+        registry, ranges = scan_log(self.path, self.database)
         parts = _plan_partitions(
             self.path,
-            start,
-            size,
+            ranges,
             registry.dumps(),
             self.database,
             self.num_partitions,
@@ -840,8 +867,8 @@ class PgCdcBatchReader(DataSourceReader):
         )
         return parts or [
             TxRangePartition(
-                self.path, start, size, registry.dumps(), self.database,
-                self.on_decode_error, self.emit_messages,
+                self.path, replay.log_min_pos(self.path), replay.log_size(self.path),
+                registry.dumps(), self.database, self.on_decode_error, self.emit_messages,
             )
         ]
 

@@ -8,7 +8,8 @@ Pins three properties of ``BucketedViewMaintainer``,
   NULL cent sum) does not break the next batch's delta fold;
 * a document index reopened over an existing work dir merges into the
   stored buckets instead of replacing them with the batch's documents;
-* ``apply_batch`` leaves the session's SQL conf as it found it.
+* ``apply_batch`` leaves the session's SQL conf as it found it, and so
+  does a bucketed ``DeleteAwareMerger`` batch.
 """
 
 import pytest
@@ -113,3 +114,61 @@ def test_apply_batch_restores_session_conf(spark, tmp_path, case):
     finally:
         for k, v in outer.items():
             conf.set(k, v)
+
+
+def test_merger_keeps_session_overwrite_mode(spark, tmp_path):
+    """A bucketed ``DeleteAwareMerger`` batch overwrites only its touched
+    buckets without switching the session to dynamic overwrite, so a
+    static merger (``n_buckets=None``) in the same session still replaces
+    its whole table."""
+    from pypgcdc_spark.api import PgCdcEngine
+    from pypgcdc_spark.cdc import pgoutput as pg
+    from pypgcdc_spark.cdc.apply import DeleteAwareMerger
+    from pypgcdc_spark.sources.pgcdc import scan_log
+    from pypgcdc_spark.testing import INTEGRATION_COLS, INTEGRATION_RELID, WorkloadWriter
+
+    def log_of(name, start_lsn, messages):
+        path = str(tmp_path / name)
+        w = WorkloadWriter(path, start_lsn=start_lsn)
+        w.relation(INTEGRATION_RELID, "integration", INTEGRATION_COLS)
+        w.tx(messages)
+        w.close()
+        return path
+
+    inserts = log_of(
+        "ins.log",
+        1000,
+        [
+            pg.encode_insert(INTEGRATION_RELID, [str(k), None, "1.00", None, f"v{k}"])
+            for k in range(10)
+        ],
+    )
+    delete = log_of(
+        "del.log",
+        10_000,
+        [pg.encode_delete(INTEGRATION_RELID, ["0", None, None, None, None])],
+    )
+    engine = PgCdcEngine(spark)
+    schema = scan_log(inserts)[0].get(INTEGRATION_RELID)
+
+    def ids(path):
+        return sorted(int(r.id) for r in spark.read.parquet(path).collect())
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    outer = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "STATIC")
+        bucketed = str(tmp_path / "bucketed")
+        merger = DeleteAwareMerger(spark, schema, bucketed, n_buckets=4)
+        merger(engine.snapshot(inserts), 0)
+        merger(engine.snapshot(delete), 1)
+        assert spark.conf.get(key) == "STATIC"
+        assert ids(bucketed) == list(range(1, 10))  # untouched buckets kept
+
+        static = str(tmp_path / "static")
+        merger = DeleteAwareMerger(spark, schema, static)
+        merger(engine.snapshot(inserts), 0)
+        merger(engine.snapshot(delete), 1)
+        assert ids(static) == list(range(1, 10))
+    finally:
+        spark.conf.set(key, outer)
