@@ -10,9 +10,9 @@ doubles as the replay buffer for at-least-once delivery.
 
 This environment has no Postgres server or psycopg2, so the class is
 import-gated and exercised only structurally; the DataSource never imports
-it.  Acks flow back by polling the ``<path>.ack`` sidecar the source's
-``commit()`` writes and forwarding ``send_feedback(flush_lsn=lsn)``
-(reference ``reader.py:161-163``).
+it.  Acks flow back by polling ``<path>.ack`` — the min ack across the
+source's consumers, which every ``commit()`` publishes — and forwarding
+``send_feedback(flush_lsn=lsn)`` (reference ``reader.py:161-163``).
 
 Round 2: ``pypgcdc_spark.sources.pgwire.WireReplicationTailer`` is the
 preferred, dependency-free implementation of the same contract — a

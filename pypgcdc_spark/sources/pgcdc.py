@@ -33,19 +33,18 @@ Offset model (reference K2/K3, ``reader.py:139,161-163``):
   pointer.  Small snapshots (≤4 KB) are embedded inline instead, so the
   common few-tables deployment never depends on the sidecar dir for
   checkpoint replay;
-* ``commit(end)`` durably acks the offset to ``<path>.ack`` — the replay
-  analog of ``send_feedback(flush_lsn)``; a live backend forwards it to
-  the walsender so Postgres can recycle WAL;
-* **multi-consumer** (r11): N independent materializers share one log by
-  naming themselves — ``.option("consumer", "ivm")`` — which moves their
-  ack to ``<path>.ack.d/<name>.json`` and makes every retention decision
-  (segment GC, registry-snapshot GC, schema-version pruning, the
-  ``<path>.ack`` watermark the wire tailer forwards to Postgres) run at
-  the MIN across registered consumers: the replication-slot model, one
-  slot per consumer.  A named reader registers a pos-0 sidecar at
-  construction so retention holds from attach time.  Unnamed readers
-  keep the single-consumer contract (their ack IS ``<path>.ack``); mixed
-  deployments degrade to the conservative min (see ``_ack_watermark``).
+* ``commit(end)`` durably acks the offset — the replay analog of
+  ``send_feedback(flush_lsn)`` — to the reader's own sidecar
+  ``<path>.ack.d/<name>.json``, one per consumer like one replication
+  slot per consumer.  ``.option("consumer", "ivm")`` names a reader; an
+  unnamed reader is ``__default__``.  Each reader registers a pos-0
+  sidecar at construction, so retention holds from attach time, and
+  every retention decision (segment GC, registry-snapshot GC,
+  schema-version pruning) runs at the MIN across registered consumers;
+* ``<path>.ack`` is only that min: each ``commit()`` publishes it under
+  an exclusive lock, and the source never reads it back.  A live
+  backend (``pgwire.WireReplicationTailer``) forwards it to the
+  walsender so Postgres can recycle WAL.
 
 Trigger caveat (Spark 4.1 Python DataSource): ``Trigger.AvailableNow``
 processes ONE ``latestOffset`` cut and stops, so combined with
@@ -68,9 +67,14 @@ the at-least-once boundary.
 from __future__ import annotations
 
 import bisect
+import contextlib
+import fcntl
 import json
 import operator
 import os
+import re
+import threading
+import warnings
 from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Iterator, List, Optional, Sequence, Tuple
@@ -89,6 +93,22 @@ from pypgcdc_spark.cdc.transform import MessageTransformer
 from pypgcdc_spark.sources import replay
 
 _end = operator.itemgetter(1)  # bisect key over sorted (start, end) ranges
+
+
+def _write_atomic(path: str, text: str) -> None:
+    """Replace ``path`` with ``text`` via a temp file and ``os.replace``,
+    so readers (the wire tailer polls ``<log>.ack``) never see a torn
+    file.  The temp name is unique per process and thread: concurrent
+    writers never share one."""
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
 
 
 @dataclass
@@ -246,34 +266,21 @@ class PgCdcStreamReader(DataSourceStreamReader):
         self.emit_messages = str(
             options.get("emitmessages", "false")
         ).lower() in ("true", "1", "yes")
-        # Multi-consumer replay (VERDICT r10 missing #4): a NAMED consumer
-        # acks to its own `<log>.ack.d/<name>.json` sidecar, and retention
-        # (segment GC, registry-snapshot GC, version pruning) runs at the
-        # MIN watermark across every registered consumer — the replication-
-        # slot model, one slot per consumer.  The legacy `<log>.ack` file
-        # is republished as the min so the wire tailer's confirmed-flush /
-        # GC path needs no changes.  Unnamed readers keep the exact r10
-        # single-consumer behavior (`.ack` is their own sidecar).
-        self.consumer = options.get("consumer") or None
-        if self.consumer is not None:
-            import re
-
-            if not re.fullmatch(r"[A-Za-z0-9_-]{1,64}", self.consumer):
-                raise ValueError(
-                    "pgcdc option 'consumer' must match [A-Za-z0-9_-]{1,64}: "
-                    f"{self.consumer!r}"
-                )
-            # Register the consumer NOW (the CREATE_REPLICATION_SLOT
-            # analog): a pos-0 sidecar pins retention from attach time, so
-            # a consumer that hasn't committed yet never loses segments to
-            # a faster sibling's acks.
-            self._register_consumer()
-        elif self._has_named_consumers():
-            # Mixed deployment (ADVICE r11): named consumers are already
-            # registered, so this unnamed reader joins the min-watermark
-            # protocol as "__default__" — registered at attach for the
-            # same pin-before-first-commit guarantee.
-            self._register_consumer()
+        # Every reader is a consumer with its own ack sidecar (the
+        # replication-slot model, one slot per consumer); an unnamed
+        # reader is "__default__".
+        self.consumer = options.get("consumer") or "__default__"
+        if not re.fullmatch(r"[A-Za-z0-9_-]{1,64}", self.consumer):
+            raise ValueError(
+                "pgcdc option 'consumer' must match [A-Za-z0-9_-]{1,64}: "
+                f"{self.consumer!r}"
+            )
+        # Log generation stamp, read lazily by _log_identity().
+        self._log_id = ""
+        # Register NOW (the CREATE_REPLICATION_SLOT analog): a pos-0
+        # sidecar pins retention from attach time, so a consumer that
+        # hasn't committed yet never loses segments to a faster sibling.
+        self._register_consumer()
         # Incremental driver-side scan state (rebuilt lazily after restart).
         self._scanned_pos = 0
         self._registry = SchemaRegistry(database=self.database)
@@ -417,7 +424,7 @@ class PgCdcStreamReader(DataSourceStreamReader):
         the first frame of THIS generation is immutable (only the open
         tail is ever rewritten, and a generation change forces a new
         reader via the size/fingerprint rewind)."""
-        if not getattr(self, "_log_id", ""):
+        if not self._log_id:
             # Segmented logs carry a persisted generation id (stable
             # across rolls AND retention GC — a first-frame identity
             # would change when its segment is collected).
@@ -430,7 +437,7 @@ class PgCdcStreamReader(DataSourceStreamReader):
                         self._log_id = f.read(replay._HDR.size).hex()
                 except OSError:
                     return ""
-        return self._log_id or ""
+        return self._log_id
 
     def _safe_cut(self) -> int:
         """Highest byte position an offset may land on right now: the
@@ -459,11 +466,7 @@ class PgCdcStreamReader(DataSourceStreamReader):
             return
         d = self._registry_dir()
         os.makedirs(d, exist_ok=True)
-        final = os.path.join(d, f"reg-{rev:08d}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(self._registry.dumps())
-        os.replace(tmp, final)  # atomic: readers never see a torn snapshot
+        _write_atomic(os.path.join(d, f"reg-{rev:08d}.json"), self._registry.dumps())
         self._persisted_rev = rev
 
     # ``file:`` references REQUIRE executors to share the driver's
@@ -574,63 +577,29 @@ class PgCdcStreamReader(DataSourceStreamReader):
     def read(self, partition: TxRangePartition) -> Iterator[Tuple]:
         return _read_range(partition)
 
-    # -- named-consumer ack sidecars (multi-consumer replay) -------------
+    # -- consumer ack sidecars (one replication slot per reader) ---------
 
     def _ack_dir(self) -> str:
         return self.path + ".ack.d"
 
-    def _has_named_consumers(self) -> bool:
-        """True if any consumer sidecar is registered under `.ack.d/`."""
-        try:
-            return any(fn.endswith(".json") for fn in os.listdir(self._ack_dir()))
-        except OSError:
-            return False
-
     def _ack_file(self) -> str:
-        """This consumer's durable ack sidecar: a per-name file under
-        `<log>.ack.d/` for named consumers; the shared `<log>.ack` for
-        unnamed readers in a single-consumer deployment (the r10
-        contract).  In a MIXED deployment — named sidecars registered
-        alongside an unnamed reader — the unnamed reader migrates to a
-        `__default__` sidecar so that (a) named siblings' min-watermark
-        includes it and (b) `<log>.ack` can carry the derived min for the
-        wire tailer, making the degradation-to-the-min bidirectional
-        (ADVICE r11: an unnamed reader previously GC'd at its OWN pos,
-        dropping segments/registry versions named consumers still
-        needed)."""
-        if self.consumer is None:
-            d = self._ack_dir()
-            own = os.path.join(d, "__default__.json")
-            if os.path.exists(own) or self._has_named_consumers():
-                return own
-            return self.path + ".ack"
         return os.path.join(self._ack_dir(), self.consumer + ".json")
 
     def _register_consumer(self) -> None:
         """Create this consumer's pos-0 sidecar if absent (idempotent)."""
         f = self._ack_file()
-        if os.path.exists(f) or not f.endswith(".json"):
-            return  # already registered, or legacy single-consumer `.ack`
+        if os.path.exists(f):
+            return
         try:
             os.makedirs(self._ack_dir(), exist_ok=True)
-            rec = {"pos": 0, "lsn": 0, "reg": 0}
-            try:
-                lid = self._log_identity()
-                if lid:
-                    rec["log_id"] = lid
-            except Exception:
-                pass  # log may not exist yet; stamp on first real ack
-            tmp = f + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(rec, fh)
-            os.replace(tmp, f)
+            # An empty log_id (log not written yet) matches any generation.
+            rec = {"pos": 0, "lsn": 0, "reg": 0, "log_id": self._log_identity()}
+            _write_atomic(f, json.dumps(rec))
         except OSError as exc:
             # The replication-slot analog (CREATE_REPLICATION_SLOT) fails
             # loudly; until the first successful commit() re-writes this
             # file, a faster sibling's acks can GC segments under an
             # unregistered consumer — surface it (ADVICE r11).
-            import warnings
-
             warnings.warn(
                 f"pgcdc consumer registration failed for {f!r}: {exc}; "
                 "retention is NOT pinned for this consumer until its "
@@ -639,63 +608,54 @@ class PgCdcStreamReader(DataSourceStreamReader):
                 stacklevel=2,
             )
 
-    def _ack_watermark(self, own_pos: int, own_lsn: int, own_reg: int):
-        """(min_pos, min_lsn, min_reg) across every registered consumer.
-
-        Stale sidecars — wrong log generation, or pos beyond the current
-        log size — are excluded: a leftover from a recreated log must not
-        pin retention forever (same validity rule the restart seed uses).
-        A legacy `<log>.ack` written by an UNNAMED consumer (no
-        "consumers" marker — the min we republish carries one) counts as
-        a consumer too, so mixed named/unnamed deployments degrade to the
-        correct conservative min instead of GC'ing under the unnamed
-        reader."""
-        size = replay.log_size(self.path)
-        lid = self._log_identity()
-
-        def _valid(rec) -> bool:
-            p = int(rec.get("pos", 0))
-            rlid = rec.get("log_id")
-            return p <= size and (not rlid or not lid or rlid == lid)
-
-        mins = [(own_pos, int(own_lsn or 0), int(own_reg or 0))]
-        try:
-            for fn in os.listdir(self._ack_dir()):
-                if not fn.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(self._ack_dir(), fn)) as fh:
-                        rec = json.load(fh)
-                    if _valid(rec):
-                        mins.append(
-                            (
-                                int(rec.get("pos", 0)),
-                                int(rec.get("lsn", 0) or 0),
-                                int(rec.get("reg", 0) or 0),
-                            )
-                        )
-                except (OSError, ValueError):
-                    continue  # torn/concurrent write: skip this round
-        except OSError:
-            pass
-        try:
-            with open(self.path + ".ack") as fh:
-                rec = json.load(fh)
-            if "consumers" not in rec and _valid(rec):
-                mins.append(
-                    (
-                        int(rec.get("pos", 0)),
-                        int(rec.get("lsn", 0) or 0),
-                        int(rec.get("reg", 0) or 0),
-                    )
+    def _read_acks(self, paths) -> List[Tuple[int, int, int]]:
+        """(pos, lsn, reg) of each valid ack sidecar in ``paths``.  Torn
+        or missing files are skipped, and so are stale ones — a pos past
+        the log's end, or another log generation's ``log_id`` — since a
+        leftover from a recreated log must neither seed a restart's
+        high-water nor pin retention forever."""
+        size, lid = replay.log_size(self.path), self._log_identity()
+        acks = []
+        for p in paths:
+            try:
+                with open(p) as fh:
+                    rec = json.load(fh)
+                ack = (
+                    int(rec.get("pos", 0)),
+                    int(rec.get("lsn", 0) or 0),
+                    int(rec.get("reg", 0) or 0),
                 )
-        except (OSError, ValueError):
-            pass
-        return (
-            min(m[0] for m in mins),
-            min(m[1] for m in mins),
-            min(m[2] for m in mins),
-        )
+            except (OSError, ValueError):
+                continue  # torn/concurrent write: skip this round
+            rlid = rec.get("log_id")
+            if ack[0] <= size and (not rlid or not lid or rlid == lid):
+                acks.append(ack)
+        return acks
+
+    def _ack_watermark(self, own: Tuple[int, int, int]) -> Tuple[int, int, int]:
+        """(min_pos, min_lsn, min_reg) across this consumer's ``own`` ack
+        and every valid registered sidecar."""
+        d = self._ack_dir()
+        names = [fn for fn in os.listdir(d) if fn.endswith(".json")]
+        acks = [own] + self._read_acks(os.path.join(d, fn) for fn in names)
+        return tuple(min(col) for col in zip(*acks))
+
+    def _publish_watermark(self, own: Tuple[int, int, int]) -> Tuple[int, int, int]:
+        """Publish the min across consumers to ``<log>.ack`` for the wire
+        tailer and return it.  Reading the sidecars and replacing
+        ``<log>.ack`` run under one exclusive lock, and every committer
+        writes its own sidecar before taking it: whoever publishes last
+        has seen every sibling's final sidecar, so a descheduled
+        committer can never overwrite a sibling's publish with the
+        stale min it read earlier."""
+        with open(os.path.join(self._ack_dir(), "publish.lock"), "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+            pos, lsn, reg = self._ack_watermark(own)
+            _write_atomic(
+                self.path + ".ack",
+                json.dumps({"pos": pos, "lsn": lsn, "log_id": self._log_identity()}),
+            )
+        return pos, lsn, reg
 
     def commit(self, end: dict) -> None:
         # Durable ack — replay analog of send_feedback(flush_lsn=...)
@@ -703,26 +663,15 @@ class PgCdcStreamReader(DataSourceStreamReader):
         # acked value is the commit *end* LSN).
         pos = int(end["pos"])
         if self._acked_pos == 0:
-            # Fresh reader (restart): seed the high-water from the ack
-            # sidecar so a replayed batch's re-ack can't rewind it.
-            # A STALE sidecar — left behind when the log was recreated
-            # but `.ack` wasn't deleted — must NOT seed: its pos would
-            # suppress every ack of the new generation until the log
-            # regrows past it, silently recreating the unbounded-WAL-
-            # retention failure the high-water fix addresses (ADVICE
-            # r7).  Two generation checks: the sidecar's log identity
-            # stamp (first-frame header, written since r8) must match,
-            # and pos must not exceed the current log size.
-            try:
-                with open(self._ack_file()) as f:
-                    ack = json.load(f)
-                acked = int(ack.get("pos", 0))
-                size = replay.log_size(self.path)
-                lid = ack.get("log_id")
-                if acked <= size and (lid is None or lid == self._log_identity()):
-                    self._acked_pos = acked
-            except (OSError, ValueError):
-                pass
+            # Fresh reader (restart): seed the high-water from the own
+            # sidecar so a replayed batch's re-ack can't rewind it.  A
+            # STALE sidecar (the log was recreated, the sidecar kept)
+            # must NOT seed: its pos would suppress every ack of the new
+            # generation until the log regrows past it — unbounded WAL
+            # retention (ADVICE r7).  _read_acks drops it.
+            seed = self._read_acks([self._ack_file()])
+            if seed:
+                self._acked_pos = seed[0][0]
         if pos <= self._acked_pos:
             # Stale re-ack from a pre-restart batch replay: the flush
             # position (like walsender flush_lsn) must never move
@@ -732,72 +681,17 @@ class PgCdcStreamReader(DataSourceStreamReader):
             # floor comparison rejects every live ack.
             return
         self._acked_pos = pos
-        # Atomic replace: the live tailer polls this file between frames
-        # (pgwire run()), so an in-place write could be read torn.  The
-        # log_id stamp (first-frame header hex) lets a future reader
-        # reject this sidecar if the log is recreated; the tailer reads
-        # only pos/lsn and ignores the extra key.
-        own = self._ack_file()
-        tmp = own + ".tmp"
         own_reg = int(self._offset_registry_ref(end) or 0) if "reg" in end else 0
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "pos": pos,
-                    "lsn": end["lsn"],
-                    "reg": own_reg,
-                    "log_id": self._log_identity(),
-                },
-                f,
-            )
-        os.replace(tmp, own)
-        # Retention watermark: this consumer's own ack for an unnamed
-        # reader in a single-consumer deployment (exactly the r10
-        # behavior — `own` IS `<log>.ack` then), the min across every
-        # registered consumer otherwise — no reader, named or not, ever
-        # loses segments, snapshots, or schema versions to a faster
-        # sibling's acks (ADVICE r11: previously only named readers
-        # consulted the sidecars, so an unnamed reader's commit GC'd at
-        # its own pos under registered named consumers).
-        if own == self.path + ".ack":
-            gc_pos, gc_lsn, rev = pos, int(end.get("lsn", 0)), own_reg
-        else:
-            gc_pos, gc_lsn, rev = self._ack_watermark(
-                pos, int(end.get("lsn", 0)), own_reg
-            )
-            # Republish the min to `<log>.ack` so the wire tailer's
-            # confirmed-flush advance + segment GC (the pipe's other end)
-            # see the multi-consumer watermark with no tailer changes.
-            # The "consumers" marker distinguishes this derived file from
-            # an unnamed consumer's own acks (see _ack_watermark).
-            # Unique temp per committing thread: concurrent consumers
-            # commit from separate streaming-query threads, and a shared
-            # `.ack.tmp` raced — one os.replace succeeds, the second
-            # throws FileNotFoundError and fails the query, or interleaved
-            # writes publish torn JSON to the tailer (ADVICE r11).
-            import threading
-
-            mtmp = (
-                f"{self.path}.ack.{os.getpid()}.{threading.get_ident()}.tmp"
-            )
-            try:
-                with open(mtmp, "w") as f:
-                    json.dump(
-                        {
-                            "pos": gc_pos,
-                            "lsn": gc_lsn,
-                            "log_id": self._log_identity(),
-                            "consumers": True,
-                        },
-                        f,
-                    )
-                os.replace(mtmp, self.path + ".ack")
-            finally:
-                try:
-                    if os.path.exists(mtmp):
-                        os.remove(mtmp)
-                except OSError:
-                    pass
+        own = (pos, int(end.get("lsn", 0) or 0), own_reg)
+        # The log_id stamp lets a later reader reject this sidecar if
+        # the log is recreated.
+        os.makedirs(self._ack_dir(), exist_ok=True)
+        rec = {"pos": pos, "lsn": own[1], "reg": own_reg, "log_id": self._log_identity()}
+        _write_atomic(self._ack_file(), json.dumps(rec))
+        # Retention watermark: the min across every registered consumer —
+        # no reader loses segments, snapshots, or schema versions to a
+        # faster sibling's acks.
+        gc_pos, gc_lsn, rev = self._publish_watermark(own)
         # Replay-log retention GC: segments wholly below the durably
         # acked watermark can never be replayed (confirmed-flush
         # semantics) — drop them.  The tailer GCs on its ack-forward
@@ -815,9 +709,9 @@ class PgCdcStreamReader(DataSourceStreamReader):
                     if fn.startswith("reg-") and fn.endswith(".json"):
                         if fn[4:-5].isdigit() and int(fn[4:-5]) < rev:
                             os.remove(os.path.join(d, fn))
-                    elif fn.endswith(".json.tmp"):
-                        # Orphaned temp from a persist interrupted between
-                        # write and the atomic replace (the r8 soak left
+                    elif fn.endswith(".tmp"):
+                        # Orphaned _write_atomic temp from a persist
+                        # interrupted before its replace (the r8 soak left
                         # two behind under consumer kills).
                         os.remove(os.path.join(d, fn))
             except OSError:

@@ -1,27 +1,24 @@
-"""Multi-consumer replay log (round-10 verdict missing #4).
+"""Multi-consumer replay log: one replication-slot analog per reader.
 
-Until r10 the ack/registry sidecars were single-consumer transport state:
-a second independent reader raced the first one's sidecar GC — consumer A
-draining and acking to the end GC'd segments (and registry snapshots)
-consumer B still needed, so the r10 soak had to fan both materializers
-out inside ONE foreachBatch.  r11 gives each consumer a replication-slot
-analog: ``.option("consumer", "<name>")`` moves its durable ack to
-``<log>.ack.d/<name>.json`` and every retention decision — segment GC,
-registry-snapshot GC, schema-version pruning, the ``<log>.ack`` watermark
-the wire tailer forwards to Postgres — runs at the MIN across registered
-consumers.
+Every stream reader is a consumer: ``.option("consumer", "<name>")``
+names it, and an unnamed reader is ``__default__``.  Its durable ack is
+``<log>.ack.d/<name>.json``, and every retention decision — segment GC,
+registry-snapshot GC, schema-version pruning — runs at the MIN across
+registered consumers.  ``<log>.ack`` is only that min, published for the
+wire tailer, which forwards it to Postgres.
 
 Pins:
-* a named consumer registers a pos-0 sidecar at construction, so a fast
+* a consumer registers a pos-0 sidecar at construction, so a fast
   sibling's full drain GC's NOTHING until the slow one catches up;
 * after both ack, retention advances to the min (and to the end once both
   finish) — the sawtooth still trims;
 * the second consumer decodes the ENTIRE log (identical envelopes to the
   first) even after the first fully drained and acked — the exact race
   that broke in r10;
-* ``<log>.ack`` is republished as the min with a ``consumers`` marker
-  (the tailer's confirmed-flush path needs no changes); an unnamed
-  reader keeps the exact single-consumer contract;
+* an unnamed reader and named readers share the same protocol, in either
+  attach order;
+* ``<log>.ack`` holds the min after concurrent commits, even when one
+  committer is descheduled between reading the sidecars and publishing;
 * engine-level: two CONCURRENT checkpointed materializers (current-state
   merger per consumer) drain one log to completion and their typed state
   tables hash-match.
@@ -63,10 +60,10 @@ def test_slow_consumer_pins_retention_until_it_acks(tmp_path):
     assert len(list_segments(seg)) == n0, "GC ran under the unacked consumer"
     assert log_min_pos(seg) == 0
 
-    # The published tailer watermark is the min (slow's 0), marked derived.
+    # The published tailer watermark is the min (slow's 0).
     with open(seg + ".ack") as f:
         pub = json.load(f)
-    assert pub["pos"] == 0 and pub.get("consumers")
+    assert pub["pos"] == 0
 
     # Slow acks a partial batch: retention advances exactly to the min.
     s0, s1 = slow.initialOffset(), slow.latestOffset()
@@ -135,8 +132,8 @@ def test_restarted_named_consumer_seeds_from_its_own_sidecar(tmp_path):
 
 
 def test_unnamed_reader_keeps_single_consumer_contract(tmp_path):
-    """No consumer option → r10 behavior exactly: `.ack` is the reader's
-    own sidecar (no derived marker) and commit GC's immediately."""
+    """A lone unnamed reader (its own `__default__` sidecar is the only
+    one) publishes its own pos to `.ack` and GC's at commit."""
     seg = _mk_segmented(tmp_path)
     n0 = len(list_segments(seg))
     r = PgCdcStreamReader({"path": seg, "maxtxperbatch": 40})
@@ -211,15 +208,15 @@ def test_two_concurrent_checkpointed_materializers(spark, tmp_path):
     assert all(0 < p <= log_size(log) for p in acks.values())
     with open(log + ".ack") as f:
         pub = json.load(f)
-    assert pub["pos"] == min(acks.values()) and pub.get("consumers")
+    assert pub["pos"] == min(acks.values())
 
 
 def test_unnamed_reader_respects_named_sidecars(tmp_path):
-    """ADVICE r11 (high): a mixed deployment — an unnamed reader draining
-    a log that has registered NAMED consumers — must degrade to the
-    conservative min in BOTH directions.  Previously the unnamed reader's
-    commit GC'd segments/registry versions at its OWN pos, irrecoverably
-    dropping replay data the named consumers still needed."""
+    """ADVICE r11 (high): an unnamed reader draining a log that has
+    registered NAMED consumers must hold retention at their min.  Once
+    the unnamed reader's commit GC'd segments/registry versions at its OWN
+    pos, irrecoverably dropping replay data the named consumers still
+    needed."""
     seg = _mk_segmented(tmp_path)
     n0 = len(list_segments(seg))
 
@@ -236,14 +233,14 @@ def test_unnamed_reader_respects_named_sidecars(tmp_path):
     assert len(list_segments(seg)) == n0, "unnamed reader GC'd under a named consumer"
     assert log_min_pos(seg) == 0
 
-    # Its own ack migrated to the __default__ sidecar; `.ack` carries the
-    # derived min (slow's 0) with the consumers marker for the tailer.
+    # Its own ack is the __default__ sidecar; `.ack` carries the min
+    # (slow's 0) for the tailer.
     with open(seg + ".ack.d/__default__.json") as f:
         own = json.load(f)
     assert own["pos"] == o1["pos"]
     with open(seg + ".ack") as f:
         pub = json.load(f)
-    assert pub["pos"] == 0 and pub.get("consumers")
+    assert pub["pos"] == 0
 
     # Once the named consumer catches up and acks, retention advances
     # (to a segment boundary at or below the acked min).
@@ -255,10 +252,10 @@ def test_unnamed_reader_respects_named_sidecars(tmp_path):
 
 
 def test_unnamed_reader_registers_default_sidecar_at_attach(tmp_path):
-    """In a mixed deployment the unnamed reader registers its
-    ``__default__`` pos-0 sidecar at construction (same attach-time pin
-    as the CREATE_REPLICATION_SLOT analog), so a named sibling's full
-    drain GC's nothing before the unnamed reader's first commit."""
+    """The unnamed reader registers its ``__default__`` pos-0 sidecar at
+    construction (same attach-time pin as the CREATE_REPLICATION_SLOT
+    analog), so a named sibling's full drain GC's nothing before the
+    unnamed reader's first commit."""
     seg = _mk_segmented(tmp_path)
     n0 = len(list_segments(seg))
 
@@ -327,4 +324,132 @@ def test_concurrent_commit_republish_no_shared_tmp(tmp_path):
     assert not os.path.exists(seg + ".ack.tmp"), "shared temp path still used"
     with open(seg + ".ack") as f:
         pub = json.load(f)  # must never be torn
-    assert pub["pos"] == min(end_a["pos"], end_b["pos"]) and pub.get("consumers")
+    assert pub["pos"] == min(end_a["pos"], end_b["pos"])
+
+
+def test_descheduled_committer_cannot_publish_stale_min(tmp_path):
+    """The stale-min race, forced: consumer `a` reads the sibling
+    sidecars (b's is still its pos-0 registration), then is descheduled;
+    `b` commits; `a` resumes.  With an unordered publish `a` overwrote
+    b's correct publish with 0.  The published `.ack` must hold the true
+    min of both final acks."""
+    import threading
+
+    seg = _mk_segmented(tmp_path)
+    a = PgCdcStreamReader({"path": seg, "consumer": "a", "maxtxperbatch": 40})
+    b = PgCdcStreamReader({"path": seg, "consumer": "b"})
+    end_a, end_b = a.latestOffset(), b.latestOffset()
+    assert 0 < end_a["pos"] < end_b["pos"]
+
+    read_done, release = threading.Event(), threading.Event()
+    watermark = a._ack_watermark
+
+    def _paused(*args, **kw):
+        mins = watermark(*args, **kw)
+        read_done.set()
+        assert release.wait(10), "test never released consumer a"
+        return mins
+
+    a._ack_watermark = _paused
+    errors = []
+
+    def _commit(reader, end):
+        try:
+            reader.commit(end)
+        except Exception as exc:  # noqa: BLE001 — the pin IS no exception
+            errors.append(exc)
+
+    ta = threading.Thread(target=_commit, args=(a, end_a))
+    tb = threading.Thread(target=_commit, args=(b, end_b))
+    ta.start()
+    assert read_done.wait(10), "consumer a never read the sidecars"
+    tb.start()
+    # An unordered publish lets b finish here; an ordered one makes b
+    # wait for a's publish, so the join times out.
+    tb.join(timeout=1.0)
+    release.set()
+    ta.join(10), tb.join(10)
+    assert not ta.is_alive() and not tb.is_alive()
+    assert not errors, f"commit raised: {errors}"
+    with open(seg + ".ack") as f:
+        assert json.load(f)["pos"] == min(end_a["pos"], end_b["pos"])
+
+
+def test_unnamed_first_then_named_drain_holds_unnamed_pos(tmp_path):
+    """An unnamed reader attaches and acks a partial batch BEFORE any
+    named consumer exists; a named consumer then drains and acks
+    everything.  Retention must hold at the unnamed reader's pos, and the
+    unnamed reader must still decode the rest of the log."""
+    seg = _mk_segmented(tmp_path)
+    n0 = len(list_segments(seg))
+
+    r = PgCdcStreamReader({"path": seg, "maxtxperbatch": 40})
+    o0, o1 = r.initialOffset(), r.latestOffset()
+    rows_r = _drain(r, o0, o1)
+    r.commit(o1)
+    after_unnamed = len(list_segments(seg))
+
+    named = PgCdcStreamReader({"path": seg, "consumer": "full"})
+    n0_, n1 = named.initialOffset(), named.latestOffset()
+    assert n1["pos"] > o1["pos"]
+    rows_named = _drain(named, n0_, n1)
+    named.commit(n1)
+    assert log_min_pos(seg) <= o1["pos"], "named drain GC'd above the unnamed pos"
+    assert len(list_segments(seg)) == after_unnamed < n0
+
+    prev = o1
+    for _ in range(100):
+        if prev["pos"] == n1["pos"]:
+            break
+        nxt = r.latestOffset()
+        rows_r.extend(_drain(r, prev, nxt))
+        r.commit(nxt)
+        prev = nxt
+    # The named consumer attached after GC, so it read the retained
+    # window only: the tail of what the unnamed reader decoded.
+    assert rows_named and rows_r[-len(rows_named):] == rows_named
+
+
+def test_many_concurrent_committers_publish_final_min(tmp_path):
+    """Stress: more committing consumers than cores, each acking the same
+    rising offsets with a tiny thread switch interval.  Once all finish
+    at the log end, the published `.ack` must be the end: a publish
+    ordered after a sibling's final sidecar can never read it stale."""
+    import sys
+    import threading
+
+    seg = _mk_segmented(tmp_path)
+    names = [f"c{i}" for i in range(max(6, (os.cpu_count() or 1) + 2))]
+    readers = [PgCdcStreamReader({"path": seg, "consumer": n}) for n in names]
+    walker = PgCdcStreamReader({"path": seg, "consumer": "walker", "maxtxperbatch": 20})
+    offsets = [walker.latestOffset()]
+    while True:
+        nxt = walker.latestOffset()
+        if nxt["pos"] == offsets[-1]["pos"]:
+            break
+        offsets.append(nxt)
+    walker.commit(offsets[-1])
+    assert len(offsets) > 3
+    errors = []
+
+    def _run(reader):
+        try:
+            for off in offsets:
+                reader.commit(dict(off))
+        except Exception as exc:  # noqa: BLE001 — the pin IS no exception
+            errors.append(exc)
+
+    threads = [threading.Thread(target=_run, args=(r,)) for r in readers]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, f"commit raised: {errors}"
+    with open(seg + ".ack") as f:
+        assert json.load(f)["pos"] == offsets[-1]["pos"]

@@ -24,6 +24,10 @@ Usage:
         [--sf /root/testdata/sf0.1] [--reps 2] [--queries q1,q2,...]
 
 Writes one JSON file with per-query {old, new, ratio} and suite ratios.
+
+To time a single query (warm pass at sf0.001, then ``--reps`` noop-sink
+passes at ``--sf``), run ``--old HEAD --queries <q>``: both sides are
+then the same code, and each side's reps are the timings.
 """
 
 from __future__ import annotations
