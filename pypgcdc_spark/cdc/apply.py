@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pypgcdc_spark.cdc.models import TOAST_UNCHANGED, TableSchema
+from pypgcdc_spark.operators.churn import AutoBuckets
 from pypgcdc_spark.operators.relayout import (
     dataset_bytes,
     load_layout,
@@ -210,7 +211,7 @@ def typed_history_span(
     )
 
 
-class DeleteAwareMerger:
+class DeleteAwareMerger(AutoBuckets):
     """foreachBatch-compatible merger keeping parquet current-state tables.
 
     Usage::
@@ -255,14 +256,14 @@ class DeleteAwareMerger:
       the raw concatenated key string rides along as ``_kraw`` so a
       REBUCKET can recompute buckets from the exact original bytes.
     * ``n_buckets="auto"``: like bucketed, but the bucket count is
-      derived from the state's on-disk volume (power-of-two, grows when
-      mean bucket size crosses ``target_bucket_bytes``) and persisted in
-      a ``_nbuckets.json`` meta sidecar inside the dataset, so a
-      restarted stream resumes with the same layout.  Crossing the
-      threshold triggers ONE full rewrite into the new bucket count
-      (the amortized cost a lake table pays for re-clustering); 4.95M
-      state rows at a fixed 64 buckets gave p50 27.5s batches in the r8
-      soak — bucket count must track state volume, not be a knob.
+      derived from the state's on-disk volume and per-batch key churn
+      (power-of-two, grow-only — the shared ``churn.AutoBuckets``
+      policy) and persisted in a ``_nbuckets.json`` meta sidecar inside
+      the dataset, so a restarted stream resumes with the same layout.
+      Growth triggers ONE full rewrite into the new bucket count (the
+      amortized cost a lake table pays for re-clustering); 4.95M state
+      rows at a fixed 64 buckets gave p50 27.5s batches in the r8 soak —
+      bucket count must track state volume, not be a knob.
 
     Two bucketed-mode correctness subtleties (ADVICE r8, both pinned by
     tests):
@@ -276,8 +277,6 @@ class DeleteAwareMerger:
       touched for that batch (truncate is table-wide by definition).
     """
 
-    #: auto mode grows the bucket count when mean bucket size crosses this.
-    TARGET_BUCKET_BYTES = 128 << 20
     MIN_BUCKETS = 8
 
     def __init__(
@@ -291,50 +290,18 @@ class DeleteAwareMerger:
         self.spark = spark
         self.schema = schema
         self.target_path = target_path
-        self.auto = n_buckets == "auto"
-        self.target_bucket_bytes = target_bucket_bytes or self.TARGET_BUCKET_BYTES
         #: every Spark job this merger starts runs under this job group so
         #: a stopping caller can cancel in-flight merge attempts —
         #: StreamingQuery.stop() does NOT (see class docstring).
         import uuid as _uuid
 
         self.job_group = "pypgcdc-merge-" + _uuid.uuid4().hex[:12]
-        #: completed rebucket transitions this process: [(old_n, new_n), ...]
-        self.rebucket_events: list = []
-        #: test-only fault injection point name (see _maybe_rebucket)
-        self._rebucket_fault: Optional[str] = None
-        #: smoothed distinct-keys-per-batch — the churn observation the
-        #: r11 soak proved the byte rule alone cannot substitute for
-        #: (operators/churn.py; restored from the meta sidecar below).
-        from pypgcdc_spark.operators.churn import (
-            MIN_CHURN_BUCKET_BYTES,
-            ChurnEwma,
-        )
-
-        self._churn = ChurnEwma()
-        #: churn growth never pushes the mean bucket below this (tunable).
-        self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
         # A prior process may have died mid-rebucket; converge the on-disk
         # layout to exactly one committed generation before reading it.
         recover_relayout(self.target_path)
-        if self.auto:
-            # The layout sidecar also restores the churn EWMA, so a
-            # restarted stream resumes with its keys-per-batch knowledge
-            # instead of re-learning it from scratch.
-            layout = load_layout(self.target_path) or {}
-            self.n_buckets = int(layout.get("n_buckets", self.MIN_BUCKETS))
-            if layout.get("keys_ewma") is not None:
-                self._churn.value = float(layout["keys_ewma"])
-        else:
-            self.n_buckets = n_buckets
-
-    # -- bucket layout (auto mode) ----------------------------------------
-
-    def _layout_record(self) -> dict:
-        rec = {"n_buckets": int(self.n_buckets)}
-        if self._churn.value is not None:
-            rec["keys_ewma"] = float(self._churn.value)
-        return rec
+        # Auto mode resumes the bucket count and the churn EWMA from the
+        # layout sidecar (operators/churn.AutoBuckets).
+        self._init_buckets(n_buckets, target_bucket_bytes, load_layout(target_path))
 
     def _existing_buckets(self) -> list:
         import os
@@ -359,58 +326,30 @@ class DeleteAwareMerger:
         return F.concat_ws("\x1f", *[F.col("key").getItem(k) for k in key_cols])
 
     @staticmethod
-    def _bucket_of(kraw_col, n: int):
-        return F.pmod(F.xxhash64(kraw_col), F.lit(n)).cast("int")
+    def _bucket(n: int):
+        return F.pmod(F.xxhash64(F.col("_kraw")), F.lit(n)).cast("int")
 
     # -- crash-atomic rebucket (operators/relayout.py) ---------------------
 
-    def _fault(self, point: str) -> None:
-        """Test hook: raising here models process death at this point —
-        nothing after the raise runs, exactly like a kill, and recovery
-        happens in the next merger's __init__ (tests/test_fault_injection)."""
-        if self._rebucket_fault == point:
-            raise RuntimeError(f"injected rebucket crash at {point}")
+    def _state_bytes(self) -> int:
+        return dataset_bytes(self.target_path)
 
-    def _maybe_rebucket(self) -> None:
-        """Auto mode: grow the bucket count (power of two) when EITHER
-        the mean bucket size crosses the byte target OR the batch key
-        churn demands it (``buckets >= CHURN_FACTOR x keys/batch`` EWMA —
-        the r11 5M soak measured the byte rule alone rewriting ~86% of a
-        5M-row state every batch at 2k keys/batch over 1024 buckets; see
-        operators/churn.py), then rewrite the WHOLE dataset once under
-        the new layout.  The stored ``_kraw`` strings are the hash input,
-        so old and new layouts hold bit-identical rows — only the
-        partition assignment changes (pinned by
-        test_bucketed_merger_rebucket_equivalence).
-
+    def _relayout(self, new_n: int, record: dict) -> None:
+        """Rewrite the WHOLE dataset once under ``new_n`` buckets.  The
+        stored ``_kraw`` strings are the hash input, so old and new
+        layouts hold bit-identical rows — only the partition assignment
+        changes (pinned by test_bucketed_merger_rebucket_equivalence).
         Crash-safe: the relaid dataset is staged beside the live one and
         swapped in by ``staged_relayout``; a kill at ANY point converges
-        via ``recover_relayout`` on restart.
-        """
-        from pypgcdc_spark.operators.churn import recommend_buckets
-
-        new_n = recommend_buckets(
-            self.n_buckets,
-            dataset_bytes(self.target_path),
-            self.target_bucket_bytes,
-            self._churn.value,
-            min_buckets=self.MIN_BUCKETS,
-            min_churn_bucket_bytes=self.min_churn_bucket_bytes,
-        )
-        if new_n == self.n_buckets:
-            return
-        rec = self._layout_record()
-        rec["n_buckets"] = int(new_n)
+        via ``recover_relayout`` on restart."""
         staged_relayout(
             self.spark,
             self.target_path,
             "_bucket",
-            lambda df: df.withColumn("_bucket", self._bucket_of(F.col("_kraw"), new_n)),
-            rec,
+            lambda df: df.withColumn("_bucket", self._bucket(new_n)),
+            record,
             fault=self._fault,
         )
-        self.rebucket_events.append((self.n_buckets, new_n))
-        self.n_buckets = new_n
 
     def cancel_pending(self) -> None:
         """Cancel any in-flight merge jobs this merger started.
@@ -443,7 +382,7 @@ class DeleteAwareMerger:
         has_truncate = False
         if bucketed:
             env = env.withColumn("_kraw", self._kraw_expr()).withColumn(
-                "_bucket", self._bucket_of(F.col("_kraw"), self.n_buckets)
+                "_bucket", self._bucket(self.n_buckets)
             )
             # ONE bounded collect covers the touched-bucket ids, the
             # truncate flag AND the batch's distinct-key count (the churn
@@ -465,8 +404,7 @@ class DeleteAwareMerger:
                 return
             touched = sorted(r._bucket for r in meta)
             has_truncate = any(r._t for r in meta)
-            if self.auto:
-                self._churn.observe(sum(r._k for r in meta))
+            self._observe_keys(sum(r._k for r in meta))
             if has_truncate:
                 # TRUNCATE is table-wide: every bucket that exists on disk
                 # is in the merge window, or stale rows survive in buckets

@@ -2,10 +2,12 @@
 
 Capability twin of the reference's pydantic model layer
 (``/root/reference/src/pypgcdc/models.py:8-76``), re-expressed as plain
-dataclasses + a Spark ``StructType`` change-event envelope.  Nothing here
-depends on a live Postgres: the envelope is exactly what the Structured
-Streaming source (``pypgcdc_spark.sources.pgcdc``) emits and what the
-apply-changes materializer (``pypgcdc_spark.cdc.apply``) consumes.
+dataclasses + the flat change-event envelope schema (``ENVELOPE_DDL``).
+Nothing here depends on a live Postgres: the envelope is exactly what the
+Structured Streaming source (``pypgcdc_spark.sources.pgcdc``) emits and
+what the apply-changes materializer (``pypgcdc_spark.cdc.apply``)
+consumes; ``PgCdcEngine.with_envelope_structs`` regroups it into the
+nested ``tx``/``source`` shape on request.
 
 Design decisions vs the reference (SURVEY §1, §7.4 defect ledger):
 
@@ -24,7 +26,6 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from enum import Enum
 from typing import Dict, List, Optional
 
 from pyspark.sql import types as T
@@ -33,24 +34,6 @@ from pyspark.sql import types as T
 # Must survive a text round-trip, hence a string no real value will collide
 # with in practice (same trick Debezium uses with "__debezium_unavailable").
 TOAST_UNCHANGED = "\x00__toast_unchanged__\x00"
-
-
-class Op(str, Enum):
-    """Operation kinds (reference models.py:17-25).
-
-    B/C/O/R/Y never surface as envelope rows — they fold into metadata —
-    which fixes the reference's crash on O/Y messages (Q2).
-    """
-
-    INSERT = "I"
-    UPDATE = "U"
-    DELETE = "D"
-    TRUNCATE = "T"
-    BEGIN = "B"
-    COMMIT = "C"
-    ORIGIN = "O"
-    RELATION = "R"
-    TYPE = "Y"
 
 
 @dataclass(frozen=True)
@@ -152,37 +135,8 @@ def pg_type_to_spark(type_name: str, atttypmod: int = -1) -> T.DataType:
 # The change-event envelope (FIXTURES.md §7; reference models.py:64-76)
 # ---------------------------------------------------------------------------
 
-TX_STRUCT = T.StructType(
-    [
-        T.StructField("tx_id", T.LongType()),
-        T.StructField("begin_lsn", T.LongType()),
-        T.StructField("commit_lsn", T.LongType()),
-        T.StructField("commit_ts", T.TimestampType()),
-    ]
-)
-
-SOURCE_STRUCT = T.StructType(
-    [
-        T.StructField("database", T.StringType()),
-        T.StructField("namespace", T.StringType()),
-        T.StructField("table", T.StringType()),
-    ]
-)
-
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("op", T.StringType(), False),
-        T.StructField("lsn", T.LongType(), False),
-        T.StructField("tx", TX_STRUCT),
-        T.StructField("source", SOURCE_STRUCT),
-        T.StructField("key", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("before", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("after", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
-
-# Flat variant used by the Python DataSource (stream sources emit flat rows;
-# maps/structs are rebuilt with one select after load()).
+# Flat: the Python DataSource emits flat rows; the key/before/after maps
+# are the only nested columns.
 ENVELOPE_DDL = (
     "op STRING, lsn BIGINT, tx_id BIGINT, begin_lsn BIGINT, commit_lsn BIGINT, "
     "commit_ts TIMESTAMP, database STRING, namespace STRING, table STRING, "

@@ -34,12 +34,20 @@ This module provides the shared pieces the sinks use to apply that rule
   half a million files — during bulk loads rewriting most of state is
   genuinely unavoidable and bucket count is irrelevant to row I/O).
 
-Consumers: ``cdc/apply.DeleteAwareMerger`` (auto mode),
-``operators/ivm.BucketedViewMaintainer``,
-``operators/join_ivm.JoinViewMaintainer`` and the soak harness's
-manifest-state maintainer — each rebuckets through its own
-crash-atomic relayout path when the recommendation crosses its current
-count.
+* :class:`AutoBuckets` — the auto bucket-count policy itself, the one
+  copy every bucketed state maintainer inherits: parse ``n_buckets``
+  (an int, or ``"auto"``), restore count + EWMA from the committed
+  layout record ``{"n_buckets", "keys_ewma"}``, build that record, and
+  grow through :func:`recommend_buckets`.
+
+Consumers: ``cdc/apply.DeleteAwareMerger`` and
+``operators/ivm.BucketedViewMaintainer`` (plain-parquet state: the record
+is the dataset's ``_nbuckets.json`` sidecar, a relayout commits through
+``relayout.staged_relayout``), ``operators/join_ivm.JoinViewMaintainer``
+and the soak harness's ``SoakAggMaintainer`` (manifest state: the record
+is the manifest's ``extra["layout"]``, a relayout commits through
+``ManifestState.replace_all``).  Each keeps only its bucket floor, its
+state-bytes measure, its bucket expression and that commit.
 """
 
 from __future__ import annotations
@@ -66,6 +74,8 @@ MAX_CHURN_BUCKETS = 1 << 17
 #: EWMA smoothing: ~the last 6 batches dominate, one outlier batch can't
 #: trigger a relayout on its own.
 EWMA_ALPHA = 0.3
+#: auto mode's volume rule: grow while the mean bucket exceeds this.
+TARGET_BUCKET_BYTES = 128 << 20
 
 
 def next_pow2(n: int) -> int:
@@ -139,6 +149,94 @@ def recommend_buckets(
         churn_n = min(churn_n, max(cap, int(min_buckets)), int(max_churn_buckets))
         new_n = max(new_n, churn_n)
     return new_n
+
+
+class AutoBuckets:
+    """Bucket-count policy shared by the bucketed state maintainers.
+
+    ``n_buckets`` is a fixed int, or ``"auto"``: the count starts at the
+    subclass's ``MIN_BUCKETS`` and, after each committed batch, grows to
+    :func:`recommend_buckets` of the state volume and the keys-per-batch
+    EWMA.  Both persist as ONE layout record ``{"n_buckets",
+    "keys_ewma"}`` (:meth:`_layout_record`), so a restarted maintainer
+    resumes its count and its churn knowledge.  A subclass supplies what
+    really differs between maintainers:
+
+    * ``MIN_BUCKETS`` — its bucket floor;
+    * ``_state_bytes()`` — the committed state volume;
+    * ``_bucket(n)`` — its bucket expression at ``n`` buckets;
+    * ``_relayout(new_n, record, *args)`` — rewrite the whole state under
+      ``_bucket(new_n)`` and commit it with ``record``, crash-atomically
+      (``relayout.staged_relayout`` with :meth:`_fault` as its fault hook,
+      or ``ManifestState.replace_all``).
+    """
+
+    MIN_BUCKETS: int
+
+    def _init_buckets(self, n_buckets, target_bucket_bytes, saved) -> None:
+        """``saved`` is the committed layout record (or None); it is only
+        read in auto mode."""
+        self.auto = n_buckets == "auto"
+        self.target_bucket_bytes = target_bucket_bytes or TARGET_BUCKET_BYTES
+        #: churn growth never pushes the mean bucket below this (tunable).
+        self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
+        #: completed relayouts this process: [(old_n, new_n), ...]
+        self.rebucket_events: list = []
+        #: test-only crash injection point name (see _fault)
+        self._relayout_fault: Optional[str] = None
+        saved = (saved or {}) if self.auto else {}
+        ewma = saved.get("keys_ewma")
+        self._churn = ChurnEwma(value=None if ewma is None else float(ewma))
+        self.n_buckets = (
+            int(saved.get("n_buckets", self.MIN_BUCKETS)) if self.auto else n_buckets
+        )
+
+    def _observe_keys(self, keys: int) -> None:
+        if self.auto:
+            self._churn.observe(keys)
+
+    def _layout_record(self, n_buckets: Optional[int] = None) -> dict:
+        rec = {"n_buckets": int(n_buckets or self.n_buckets)}
+        if self._churn.value is not None:
+            rec["keys_ewma"] = float(self._churn.value)
+        return rec
+
+    def _manifest_extra(self, agg_rows, layout: Optional[dict] = None) -> dict:
+        """Manifest extras of a manifest-state maintainer: its aggregate
+        rows and, in auto mode, the layout record."""
+        extra = {"agg": [list(r) for r in agg_rows]}
+        if self.auto:
+            extra["layout"] = layout or self._layout_record()
+        return extra
+
+    def _fault(self, point: str) -> None:
+        """Test hook: raising here models process death at this point —
+        nothing after the raise runs, exactly like a kill, and recovery
+        happens in the next instance's __init__."""
+        if self._relayout_fault == point:
+            raise RuntimeError(f"injected relayout crash at {point}")
+
+    def _maybe_rebucket(self, *commit_args) -> None:
+        """Auto mode, after a committed batch: when the byte rule or the
+        churn rule (buckets >= factor x keys/batch EWMA) demands more
+        buckets, relay the whole state once under the new count.  The
+        bucket is a pure function of a stored column, so the relaid rows
+        are identical; only their bucket assignment moves."""
+        if not self.auto:
+            return
+        new_n = recommend_buckets(
+            self.n_buckets,
+            self._state_bytes(),
+            self.target_bucket_bytes,
+            self._churn.value,
+            min_buckets=self.MIN_BUCKETS,
+            min_churn_bucket_bytes=self.min_churn_bucket_bytes,
+        )
+        if new_n == self.n_buckets:
+            return
+        self._relayout(new_n, self._layout_record(new_n), *commit_args)
+        self.rebucket_events.append((self.n_buckets, new_n))
+        self.n_buckets = new_n
 
 
 def touched_buckets_and_keys(

@@ -44,6 +44,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pypgcdc_spark.operators.churn import AutoBuckets, touched_buckets_and_keys
+from pypgcdc_spark.operators.relayout import (
+    dataset_bytes,
+    load_layout,
+    recover_relayout,
+    save_layout,
+    staged_relayout,
+)
 from pypgcdc_spark.operators.state_prune import dataset_exists
 
 KEY_SCHEMA = (
@@ -52,15 +60,13 @@ KEY_SCHEMA = (
 AGG_SCHEMA = "event_type STRING, n_keys LONG, total_cents LONG"
 
 
-class BucketedViewMaintainer:
+class BucketedViewMaintainer(AutoBuckets):
     """Retract/add IVM over ``events``-shaped change batches.
 
     ``apply_batch`` is ``foreachBatch``-compatible; ``aggregate()`` returns
     the maintained view (live keys + cent sums per last event type).
     """
 
-    #: auto mode: mean bucket size byte target (volume rule) and floor.
-    TARGET_BUCKET_BYTES = 128 << 20
     MIN_BUCKETS = 16
 
     def __init__(
@@ -71,11 +77,6 @@ class BucketedViewMaintainer:
         guard_id: str = None,
         target_bucket_bytes: int = None,
     ):
-        from pypgcdc_spark.operators.churn import (
-            MIN_CHURN_BUCKET_BYTES,
-            ChurnEwma,
-        )
-
         self.spark = spark
         self.work = work_dir
         # Stream-lineage identity for the replay guard (conventionally the
@@ -84,33 +85,27 @@ class BucketedViewMaintainer:
         # (ADVICE r8; see batch_guard module docstring).
         self.guard_id = guard_id
         self.key_path = f"{work_dir}/key_state"
-        self.auto = n_buckets == "auto"
-        self.target_bucket_bytes = target_bucket_bytes or self.TARGET_BUCKET_BYTES
-        #: churn-rate EWMA driving auto growth (operators/churn.py — the
-        #: r11 soak's fix: buckets must track keys/batch, not just bytes).
-        self._churn = ChurnEwma()
-        #: churn growth never pushes the mean bucket below this (tunable).
-        self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
-        self.rebucket_events: list = []
-        self._relayout_fault = None  # test-only crash injection point
-        if self.auto:
-            from pypgcdc_spark.operators.relayout import (
-                load_layout,
-                recover_relayout,
-            )
-
-            recover_relayout(self.key_path)
-            layout = load_layout(self.key_path)
-            if layout:
-                self.n_buckets = int(layout["n_buckets"])
-                if layout.get("keys_ewma") is not None:
-                    self._churn.value = float(layout["keys_ewma"])
-            else:
-                self.n_buckets = self.MIN_BUCKETS
-        else:
-            self.n_buckets = n_buckets
+        # A prior process may have died mid-relayout: converge to one
+        # committed generation, then resume its layout sidecar (auto mode).
+        recover_relayout(self.key_path)
+        self._init_buckets(n_buckets, target_bucket_bytes, load_layout(self.key_path))
         self._has_keys = dataset_exists(self.key_path)
+        # The aggregate is a function of key state, so a reopened
+        # maintainer folds it from the committed keys — counting exactly
+        # the rows the delta fold counts (live, ``is_deleted`` false).
+        # Exact even after a crash between the state write and the batch
+        # marker: the replayed batch then meets its own keys, whose LSN
+        # guard makes it a no-op.
         self._agg_rows: list = []
+        if self._has_keys:
+            self._agg_rows = [
+                tuple(r)
+                for r in self.spark.read.parquet(self.key_path)
+                .filter(~F.col("is_deleted"))
+                .groupBy("event_type")
+                .agg(F.count(F.lit(1)), F.sum("cents"))
+                .collect()
+            ]
 
     # -- state accessors ------------------------------------------------
 
@@ -150,9 +145,7 @@ class BucketedViewMaintainer:
             mark_applied(self.work, batch_id, self.guard_id)
 
     def _apply(self, batch_df: DataFrame) -> None:
-        bucket = F.pmod(F.col("user_id"), F.lit(self.n_buckets)).cast("int")
-        from pypgcdc_spark.operators.churn import touched_buckets_and_keys
-
+        bucket = self._bucket(self.n_buckets)
         # Same bounded collect as the pruning path, now also carrying the
         # batch's distinct-key count — the churn observation that drives
         # auto bucket growth (operators/churn.py).  This collect doubles
@@ -167,8 +160,7 @@ class BucketedViewMaintainer:
         )
         if not batch_buckets:
             return
-        if self.auto:
-            self._churn.observe(batch_keys)
+        self._observe_keys(batch_keys)
 
         # The whole per-key reconciliation is ONE aggregation, not a
         # groupBy + full-outer join: old state rows and batch rows stack
@@ -290,56 +282,26 @@ class BucketedViewMaintainer:
         ]
         self._has_keys = os.path.isdir(self.key_path)
         if self.auto:
-            from pypgcdc_spark.operators.relayout import save_layout
-
             save_layout(self.key_path, self._layout_record())
             self._maybe_rebucket()
 
-    # -- churn-adaptive relayout (auto mode) ----------------------------
+    # -- churn-adaptive relayout (auto mode, operators/churn.py) -------
 
-    def _layout_record(self) -> dict:
-        rec = {"n_buckets": int(self.n_buckets)}
-        if self._churn.value is not None:
-            rec["keys_ewma"] = float(self._churn.value)
-        return rec
+    @staticmethod
+    def _bucket(n: int):
+        return F.pmod(F.col("user_id"), F.lit(n)).cast("int")
 
-    def _fault(self, point: str) -> None:
-        if self._relayout_fault == point:
-            raise RuntimeError(f"injected relayout crash at {point}")
+    def _state_bytes(self) -> int:
+        return dataset_bytes(self.key_path)
 
-    def _maybe_rebucket(self) -> None:
-        """Auto mode: grow the bucket count when the byte target OR the
-        churn rule (buckets >= factor x keys/batch EWMA) demands it, then
-        relay the whole key state once, crash-atomically
-        (operators/relayout.py — stage, marker last, two-rename swap).
-        The bucket is a pure function of the stored ``user_id``, so the
-        relaid rows are bit-identical; only partition assignment moves."""
-        from pypgcdc_spark.operators.churn import recommend_buckets
-        from pypgcdc_spark.operators.relayout import dataset_bytes, staged_relayout
-
-        if not self._has_keys:
-            return
-        new_n = recommend_buckets(
-            self.n_buckets,
-            dataset_bytes(self.key_path),
-            self.target_bucket_bytes,
-            self._churn.value,
-            min_buckets=self.MIN_BUCKETS,
-            min_churn_bucket_bytes=self.min_churn_bucket_bytes,
-        )
-        if new_n == self.n_buckets:
-            return
-        rec = self._layout_record()
-        rec["n_buckets"] = int(new_n)
+    def _relayout(self, new_n: int, record: dict) -> None:
+        """Relay the whole key state once, crash-atomically
+        (operators/relayout.py — stage, marker last, two-rename swap)."""
         staged_relayout(
             self.spark,
             self.key_path,
             "bucket",
-            lambda df: df.withColumn(
-                "bucket", F.pmod(F.col("user_id"), F.lit(new_n)).cast("int")
-            ),
-            rec,
+            lambda df: df.withColumn("bucket", self._bucket(new_n)),
+            record,
             fault=self._fault,
         )
-        self.rebucket_events.append((self.n_buckets, new_n))
-        self.n_buckets = new_n

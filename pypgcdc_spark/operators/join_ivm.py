@@ -43,6 +43,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pypgcdc_spark.operators.churn import AutoBuckets, touched_buckets_and_keys
 from pypgcdc_spark.queries import load, query
 
 N_BUCKETS = 8
@@ -156,7 +157,7 @@ def chunked_join_log(spark: SparkSession, sf_dir: str) -> str:
     return _JOIN_LOGS[key]
 
 
-class JoinViewMaintainer:
+class JoinViewMaintainer(AutoBuckets):
     """ΔV = ΔA⋈B_old ∪ A_new⋈ΔB with retract/add aggregate upkeep.
 
     Per-batch cost discipline (r6: the r5 shape spent ~6 driver-visible
@@ -192,8 +193,7 @@ class JoinViewMaintainer:
         "priority STRING, lsn LONG, b_n LONG, b_cents LONG"
     )
 
-    #: auto mode: mean bucket size byte target (volume rule) and floor.
-    TARGET_BUCKET_BYTES = 128 << 20
+    MIN_BUCKETS = N_BUCKETS
 
     def __init__(
         self,
@@ -204,10 +204,6 @@ class JoinViewMaintainer:
         target_bucket_bytes: int = None,
     ):
         from pypgcdc_spark.operators.atomic_state import ManifestState
-        from pypgcdc_spark.operators.churn import (
-            MIN_CHURN_BUCKET_BYTES,
-            ChurnEwma,
-        )
 
         self.spark = spark
         self.work = work_dir
@@ -228,60 +224,29 @@ class JoinViewMaintainer:
         # manifest's extras, so a restart resumes count + keys-EWMA, and a
         # relayout commits through the manifest protocol itself
         # (ManifestState.replace_all — one os.replace, no extra machinery).
-        self.auto = n_buckets == "auto"
-        self.target_bucket_bytes = target_bucket_bytes or self.TARGET_BUCKET_BYTES
-        self._churn = ChurnEwma()
-        #: churn growth never pushes the mean bucket below this (tunable).
-        self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
-        self.rebucket_events: list = []
-        if self.auto:
-            layout = self.state.extra("layout", None) or {}
-            self.n_buckets = int(layout.get("n_buckets", N_BUCKETS))
-            if layout.get("keys_ewma") is not None:
-                self._churn.value = float(layout["keys_ewma"])
-        else:
-            self.n_buckets = n_buckets
+        self._init_buckets(n_buckets, target_bucket_bytes, self.state.extra("layout"))
 
-    def _layout_record(self) -> dict:
-        rec = {"n_buckets": int(self.n_buckets)}
-        if self._churn.value is not None:
-            rec["keys_ewma"] = float(self._churn.value)
-        return rec
+    @staticmethod
+    def _bucket(n: int):
+        return (F.col("orderkey") % n).cast("int")
 
-    def _extras(self, agg_rows) -> dict:
-        extra = {"agg": [list(r) for r in agg_rows]}
-        if self.auto:
-            extra["layout"] = self._layout_record()
-        return extra
+    def _state_bytes(self) -> int:
+        return self.state.live_bytes()
 
-    def _maybe_rebucket(self, batch_id: int) -> None:
-        """Auto mode: when the byte target or the churn rule (buckets >=
-        factor x keys/batch EWMA — operators/churn.py) demands more
-        buckets, rewrite the state under the new assignment via ONE
-        atomic manifest swap (``replace_all``); committed with the same
+    def _relayout(self, new_n: int, record: dict, batch_id: int) -> None:
+        """Rewrite the state under ``new_n`` buckets via ONE atomic
+        manifest swap (``replace_all``); committed with the same
         batch_id, so a crash mid-relayout replays nothing and leaves the
         old generation live."""
-        from pypgcdc_spark.operators.churn import recommend_buckets
-
-        new_n = recommend_buckets(
-            self.n_buckets,
-            self.state.live_bytes(),
-            self.target_bucket_bytes,
-            self._churn.value,
-            min_buckets=N_BUCKETS,
-            min_churn_bucket_bytes=self.min_churn_bucket_bytes,
-        )
-        if new_n == self.n_buckets:
-            return
         relaid = self.state.read(self.STATE_SCHEMA).withColumn(
-            "bucket", (F.col("orderkey") % new_n).cast("int")
+            "bucket", self._bucket(new_n)
         )
-        old_n = self.n_buckets
-        self.n_buckets = new_n
         self.state.replace_all(
-            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows)
+            relaid,
+            batch_id,
+            self.guard_id,
+            extra=self._manifest_extra(self._agg_rows, record),
         )
-        self.rebucket_events.append((old_n, new_n))
 
     def _read_agg(self) -> DataFrame:
         return self.spark.createDataFrame(self._agg_rows, self.AGG_SCHEMA)
@@ -301,13 +266,11 @@ class JoinViewMaintainer:
             return
         from pypgcdc_spark.operators.batch_guard import delta_step_conf
 
-        bucket = (F.col("orderkey") % self.n_buckets).cast("int")
+        bucket = self._bucket(self.n_buckets)
         with delta_step_conf(self.spark, self.n_buckets):
             self._apply(batch_df, bucket, batch_id)
 
     def _apply(self, batch_df: DataFrame, bucket, batch_id: int) -> None:
-        from pypgcdc_spark.operators.churn import touched_buckets_and_keys
-
         # Same bounded collect as the pruning path, plus the batch's
         # distinct-key count (the churn observation driving auto growth).
         # Doubles as the empty-batch probe (the separate isEmpty() action
@@ -320,11 +283,10 @@ class JoinViewMaintainer:
         if not batch_buckets:
             self.state.finalize(
                 None, [], batch_id, self.guard_id,
-                extra=self._extras(self._agg_rows),
+                extra=self._manifest_extra(self._agg_rows),
             )
             return
-        if self.auto:
-            self._churn.observe(batch_keys)
+        self._observe_keys(batch_keys)
 
         # The whole per-key reconciliation is ONE aggregation, not a join
         # tree: old state and the batch stack into one tall frame tagged
@@ -505,11 +467,10 @@ class JoinViewMaintainer:
             touched,
             batch_id,
             self.guard_id,
-            extra=self._extras([list(r) for r in rows]),
+            extra=self._manifest_extra(rows),
         )
         self._agg_rows = rows
-        if self.auto:
-            self._maybe_rebucket(batch_id)
+        self._maybe_rebucket(batch_id)
 
 
 @query(

@@ -998,7 +998,10 @@ class WireReplicationTailer:
         )
 
         n = 0
-        flushed = 0
+        # The flush LSN reported to the server only moves forward: a new
+        # consumer registering at pos 0 drops the published `.ack` back,
+        # but what an earlier run confirmed stays confirmed.
+        flushed = self.flushed_lsn
         idle = 0
         # Unit-granularity dedup (replaces the per-frame LSN seen-set):
         # a unit COMMITS to the log only when it CLOSES (Commit / Stream

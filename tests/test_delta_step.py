@@ -7,7 +7,8 @@ Pins three properties of ``BucketedViewMaintainer``,
 * a NULL stored in the maintained aggregate (a NULL join priority, a
   NULL cent sum) does not break the next batch's delta fold;
 * a document index reopened over an existing work dir merges into the
-  stored buckets instead of replacing them with the batch's documents;
+  stored buckets instead of replacing them with the batch's documents,
+  and a reopened view maintainer keeps its aggregate;
 * ``apply_batch`` leaves the session's SQL conf as it found it, and so
   does a bucketed ``DeleteAwareMerger`` batch.
 """
@@ -79,6 +80,26 @@ def test_document_index_restart_keeps_state(spark, tmp_path, cls):
     reopened.apply_batch(spark.createDataFrame([(3, "I", 6, text)], DOCS), 1)
     live = spark.read.parquet(reopened.path).filter("NOT deleted")
     assert sorted(r.doc_id for r in live.select("doc_id").distinct().collect()) == [2, 4, 6]
+
+
+def test_view_restart_keeps_aggregate(spark, tmp_path):
+    """A view maintainer reopened over its work dir folds its aggregate
+    from the committed key state: the next batch retracts user 1's 'view'
+    from it instead of from an empty aggregate."""
+    work = str(tmp_path / "view")
+    first = BucketedViewMaintainer(spark, work, n_buckets=2)
+    first.apply_batch(
+        spark.createDataFrame(
+            [(1, 1, "view", 1.0), (2, 2, "view", 2.0), (3, 3, "click", 3.0)], EVENTS
+        ),
+        0,
+    )
+    reopened = BucketedViewMaintainer(spark, work, n_buckets=2)
+    reopened.apply_batch(spark.createDataFrame([(4, 1, "click", 5.0)], EVENTS), 1)
+    assert sorted(tuple(r) for r in reopened.aggregate().collect()) == [
+        ("click", 2, 800),
+        ("view", 1, 200),
+    ]
 
 
 CONF_KEYS = {

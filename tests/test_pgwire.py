@@ -1481,6 +1481,37 @@ def test_cross_run_resume_seed_scan_starts_at_ack(tmp_path):
     assert [e.op for e in events] == ["I", "U", "D", "I"]
 
 
+def test_ack_moving_back_never_lowers_flush_feedback(tmp_path):
+    """The published ``<log>.ack`` moves BACK to pos 0 / lsn 0 when a new
+    consumer registers at pos 0.  Across drain runs on one tailer the
+    flush LSN reported to the server never decreases, and no unit is
+    appended twice."""
+    frames, _ = _workload_frames(tmp_path)
+    # keepalive_every=1: a reply-requested keepalive after every frame, so
+    # every run reports its flush position to the server.
+    srv = FakeWalsender(auth="trust", frames=frames, slot_exists=True, keepalive_every=1)
+    srv.start()
+    log = str(tmp_path / "ackback.log")
+    tailer = WireReplicationTailer("127.0.0.1", srv.port, USER, DB, "pub1", "slot1", log)
+    tailer.start()
+    got = tailer.run(max_messages=5)  # R, R and unit 1 (B, I, C)
+    unit1 = list(scan_frames(log))[4]
+    with open(log + ".ack", "w") as f:
+        json.dump({"pos": unit1.end_pos, "lsn": unit1.lsn}, f)
+    got += tailer.run(max_messages=3)  # polls forward the ack: unit 2
+    assert unit1.lsn in srv.feedback
+    # A new consumer registers at pos 0: the published minimum drops.
+    with open(log + ".ack", "w") as f:
+        json.dump({"pos": 0, "lsn": 0}, f)
+    got += tailer.run()
+    tailer.stop()
+    srv.join(10)
+    assert srv.error is None
+    assert got == len(frames)
+    assert [(fr.lsn, fr.payload) for fr in scan_frames(log)] == frames
+    assert srv.feedback == sorted(srv.feedback)
+
+
 def test_replay_writer_truncate_drops_only_the_tail(tmp_path):
     """ReplayLogWriter.pos/truncate — the write-through tailer's drop
     mechanism: truncating back to a recorded position removes exactly

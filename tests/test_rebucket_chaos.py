@@ -105,8 +105,8 @@ def test_rebucket_crash_converges(engine, spark, tmp_path, point):
     m = DeleteAwareMerger(
         spark, schema, target, n_buckets="auto", target_bucket_bytes=1024
     )
-    m._rebucket_fault = point
-    with pytest.raises(RuntimeError, match="injected rebucket crash"):
+    m._relayout_fault = point
+    with pytest.raises(RuntimeError, match="injected relayout crash"):
         m(engine.snapshot(log0), 0)
 
     # "Restart": recovery runs in __init__; the failed epoch is then

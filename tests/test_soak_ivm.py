@@ -72,7 +72,7 @@ def _expected_agg(state: dict) -> list:
     return sorted((g, n, c) for g, (n, c) in groups.items() if n > 0)
 
 
-def test_soak_ivm_maintainer_delta_math(engine, spark, tmp_path):
+def _check_maintainer_delta_math(engine, spark, tmp_path, n_buckets):
     from soak import SoakAggMaintainer
 
     # batch 0: 40 inserts; batch 1: updates, deletes, and a re-insert.
@@ -93,7 +93,12 @@ def test_soak_ivm_maintainer_delta_math(engine, spark, tmp_path):
         ],
         start_lsn=100_000,
     )
-    mt = SoakAggMaintainer(spark, str(tmp_path / "ivm"), guard_id="lineage-a")
+    mt = SoakAggMaintainer(
+        spark, str(tmp_path / "ivm"), n_buckets=n_buckets, guard_id="lineage-a"
+    )
+    if n_buckets == "auto":
+        # A small churn floor lets the 40-key state relay.
+        mt.min_churn_bucket_bytes = 64
     mt(engine.snapshot(log0), 0)
     mt(engine.snapshot(log1), 1)
 
@@ -110,8 +115,13 @@ def test_soak_ivm_maintainer_delta_math(engine, spark, tmp_path):
 
     # Restart-durability: a FRESH maintainer restores the aggregate from
     # the manifest, and keeps maintaining from there.
-    mt2 = SoakAggMaintainer(spark, str(tmp_path / "ivm"), guard_id="lineage-a")
+    mt2 = SoakAggMaintainer(
+        spark, str(tmp_path / "ivm"), n_buckets=n_buckets, guard_id="lineage-a"
+    )
     assert mt2.aggregate_rows() == _expected_agg(state)
+    if n_buckets == "auto":
+        assert mt.rebucket_events, "churn never triggered a manifest relayout"
+        assert mt2.n_buckets == mt.n_buckets > SoakAggMaintainer.MIN_BUCKETS
     log2 = _write_log(
         tmp_path,
         "b2.log",
@@ -127,6 +137,14 @@ def test_soak_ivm_maintainer_delta_math(engine, spark, tmp_path):
     mt2(empty, 3)
     assert mt2.state.already_applied(3, "lineage-a")
     assert mt2.aggregate_rows() == _expected_agg(state)
+
+
+def test_soak_ivm_maintainer_delta_math(engine, spark, tmp_path):
+    _check_maintainer_delta_math(engine, spark, tmp_path, 32)
+
+
+def test_soak_ivm_maintainer_delta_math_auto_buckets(engine, spark, tmp_path):
+    _check_maintainer_delta_math(engine, spark, tmp_path, "auto")
 
 
 def test_soak_two_sinks_one_batch(engine, spark, tmp_path):

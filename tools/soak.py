@@ -56,6 +56,10 @@ sys.path.insert(
 from test_live_postgres import DB, PASSWORD, USER, LivePg  # noqa: E402
 
 from pypgcdc_spark.cdc.models import ColumnDefinition, TableSchema  # noqa: E402
+from pypgcdc_spark.operators.churn import (  # noqa: E402
+    AutoBuckets,
+    touched_buckets_and_keys,
+)
 from pypgcdc_spark.sources.pgwire import (  # noqa: E402
     ProtocolError,
     WireReplicationTailer,
@@ -451,7 +455,7 @@ class SeedTrickle(threading.Thread):
             pass
 
 
-class SoakAggMaintainer:
+class SoakAggMaintainer(AutoBuckets):
     """Manifest-committed IVM over the LIVE replicated envelope stream
     (round-9 verdict task 1: auto-bucketing, segmented retention and the
     atomic manifest commit protocol exercised TOGETHER at volume).
@@ -471,7 +475,6 @@ class SoakAggMaintainer:
     N_GROUPS = 16
 
     MIN_BUCKETS = 32
-    TARGET_BUCKET_BYTES = 128 << 20
 
     def __init__(
         self,
@@ -482,10 +485,6 @@ class SoakAggMaintainer:
         target_bucket_bytes: int = None,
     ):
         from pypgcdc_spark.operators.atomic_state import ManifestState
-        from pypgcdc_spark.operators.churn import (
-            MIN_CHURN_BUCKET_BYTES,
-            ChurnEwma,
-        )
 
         self.spark = spark
         self.guard_id = guard_id
@@ -497,53 +496,27 @@ class SoakAggMaintainer:
         # ManifestState.replace_all (one os.replace).  The r11 attempt
         # measured the fixed-count failure: 2k keys/batch over 1024
         # buckets rewrote ~86% of a 5M-row state every batch.
-        self.auto = n_buckets == "auto"
-        self.target_bucket_bytes = target_bucket_bytes or self.TARGET_BUCKET_BYTES
-        self._churn = ChurnEwma()
-        #: churn growth never pushes the mean bucket below this (tunable).
-        self.min_churn_bucket_bytes = MIN_CHURN_BUCKET_BYTES
-        self.rebucket_events: list = []
-        if self.auto:
-            layout = self.state.extra("layout", None) or {}
-            self.n_buckets = int(layout.get("n_buckets", self.MIN_BUCKETS))
-            if layout.get("keys_ewma") is not None:
-                self._churn.value = float(layout["keys_ewma"])
-        else:
-            self.n_buckets = n_buckets
+        self._init_buckets(n_buckets, target_bucket_bytes, self.state.extra("layout"))
 
-    def _extras(self, agg_rows) -> dict:
-        extra = {"agg": [list(r) for r in agg_rows]}
-        if self.auto:
-            layout = {"n_buckets": int(self.n_buckets)}
-            if self._churn.value is not None:
-                layout["keys_ewma"] = float(self._churn.value)
-            extra["layout"] = layout
-        return extra
-
-    def _maybe_rebucket(self, batch_id: int) -> None:
+    @staticmethod
+    def _bucket(n: int):
         from pyspark.sql import functions as F
 
-        from pypgcdc_spark.operators.churn import recommend_buckets
+        return F.pmod(F.col("id"), F.lit(n)).cast("int")
 
-        new_n = recommend_buckets(
-            self.n_buckets,
-            self.state.live_bytes(),
-            self.target_bucket_bytes,
-            self._churn.value,
-            min_buckets=self.MIN_BUCKETS,
-            min_churn_bucket_bytes=self.min_churn_bucket_bytes,
-        )
-        if new_n == self.n_buckets:
-            return
+    def _state_bytes(self) -> int:
+        return self.state.live_bytes()
+
+    def _relayout(self, new_n: int, record: dict, batch_id: int) -> None:
         relaid = self.state.read("bucket INT, " + self.STATE_SCHEMA).withColumn(
-            "bucket", F.pmod(F.col("id"), F.lit(new_n)).cast("int")
+            "bucket", self._bucket(new_n)
         )
-        old_n = self.n_buckets
-        self.n_buckets = new_n
         self.state.replace_all(
-            relaid, batch_id, self.guard_id, extra=self._extras(self._agg_rows)
+            relaid,
+            batch_id,
+            self.guard_id,
+            extra=self._manifest_extra(self._agg_rows, record),
         )
-        self.rebucket_events.append((old_n, new_n))
 
     def aggregate_rows(self) -> list:
         return sorted(
@@ -569,18 +542,14 @@ class SoakAggMaintainer:
             # Idle batch: marker-only commit advances the high-water.
             self.state.finalize(
                 None, [], batch_id, self.guard_id,
-                extra=self._extras(self._agg_rows),
+                extra=self._manifest_extra(self._agg_rows),
             )
             self.batches_applied += 1
             return
-        bucket = F.pmod(F.col("id"), F.lit(self.n_buckets)).cast("int")
-        from pypgcdc_spark.operators.churn import touched_buckets_and_keys
-
         batch_buckets, batch_keys = touched_buckets_and_keys(
-            rows, bucket, F.col("id")
+            rows, self._bucket(self.n_buckets), F.col("id")
         )
-        if self.auto:
-            self._churn.observe(batch_keys)
+        self._observe_keys(batch_keys)
         old = self.state.read(
             "bucket INT, " + self.STATE_SCHEMA,
             F.col("bucket").isin([int(b) for b in batch_buckets]),
@@ -638,7 +607,7 @@ class SoakAggMaintainer:
         new_state = w.filter(
             F.when(F.col("eff"), F.lit(True)).otherwise(F.col("lsn").isNotNull())
         ).select(
-            F.pmod(F.col("id"), F.lit(self.n_buckets)).cast("int").alias("bucket"),
+            self._bucket(self.n_buckets).alias("bucket"),
             "id",
             F.when(F.col("eff"), F.col("new_lsn")).otherwise(F.col("lsn")).alias("lsn"),
             F.when(F.col("eff"), F.col("new_cents")).otherwise(F.col("cents")).alias("cents"),
@@ -659,14 +628,13 @@ class SoakAggMaintainer:
             [(int(b),) for b in batch_buckets],
             batch_id,
             self.guard_id,
-            extra=self._extras(
+            extra=self._manifest_extra(
                 [[int(g), int(n), int(c)] for g, n, c in agg_rows]
             ),
         )
         self._agg_rows = [tuple(r) for r in agg_rows]
         self.batches_applied += 1
-        if self.auto:
-            self._maybe_rebucket(batch_id)
+        self._maybe_rebucket(batch_id)
 
 
 def state_hash(rows) -> str:
