@@ -1,6 +1,9 @@
 """Benchmark harness: headline queries at SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[SPARK_GRAFT_CPUS].
 
+    python bench.py             # append the full record to artifacts/BENCH_RUNS.jsonl
+    python bench.py --anchor    # ... and also rewrite the committed BENCH.json
+
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": 0.1}
@@ -13,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import socket
 import sys
 import time
 
@@ -309,6 +313,8 @@ def run_scaling_probe(spark, sf_dir: str, cpus: int) -> dict:
     VERDICT r12 scaling block, suspect_cpus_ignored)."""
     widths = sorted({max(2, cpus // 4), cpus})
     walls = {w: None for w in widths}
+    jsc = spark.sparkContext._jsc
+    held = set(jsc.getPersistentRDDs())
     inputs = {w: _scaling_probe_input(spark, sf_dir, w) for w in widths}
     for _rep in range(2):
         for w in widths:
@@ -320,8 +326,11 @@ def run_scaling_probe(spark, sf_dir: str, cpus: int) -> dict:
             dt = time.perf_counter() - t0
             walls[w] = dt if walls[w] is None else min(walls[w], dt)
     spark.sparkContext.setJobDescription(None)
-    for df in inputs.values():
-        df.unpersist()
+    # localCheckpoint persists its RDD's blocks, which the DataFrame's
+    # unpersist() does not reach: free the RDDs the inputs added.
+    rdds = jsc.getPersistentRDDs()
+    for rdd_id in set(rdds) - held:
+        rdds[rdd_id].unpersist(True)
     narrow, wide = widths[0], widths[-1]
     out = {
         "inflate": PROBE_INFLATE,
@@ -603,19 +612,22 @@ def main():
     # The full record goes to a FILE: round 3's stdout line outgrew the
     # driver's output-tail capture window (BENCH_r03.json "parsed": null),
     # so the machine-readable artifact must not depend on line length.
+    # Every run appends to BENCH_RUNS.jsonl; the committed BENCH.json
+    # anchor is rewritten only with --anchor, so an ad-hoc run on another
+    # host or core count cannot replace it.
+    full["nproc"] = len(os.sched_getaffinity(0))
+    full["host"] = socket.gethostname()
     here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH.json"), "w") as f:
-        json.dump(full, f, indent=1)
-    # Also keep a per-run copy (r11: the round's one clean-canary run was
-    # overwritten by a contended re-run before it could be committed —
-    # repeated runs hunting an idle hypervisor window must not destroy
-    # earlier evidence).  BENCH_RUNS.jsonl accumulates; pick the best
-    # canary run from it when re-anchoring.
+    record = os.path.join("artifacts", "BENCH_RUNS.jsonl")
     try:
-        with open(os.path.join(here, "artifacts", "BENCH_RUNS.jsonl"), "a") as f:
+        with open(os.path.join(here, record), "a") as f:
             f.write(json.dumps(full) + "\n")
     except OSError:
         pass
+    if "--anchor" in sys.argv[1:]:
+        record = "BENCH.json"
+        with open(os.path.join(here, record), "w") as f:
+            json.dump(full, f, indent=1)
     # The LAST stdout line stays compact — headline timings only — so the
     # driver's tail capture always parses it whole.
     print(
@@ -638,7 +650,7 @@ def main():
                 },
                 "sf": sf,
                 "cpus": cpus,
-                "full_record": "BENCH.json",
+                "full_record": record,
             }
         )
     )

@@ -51,20 +51,27 @@ class PgCdcEngine:
         self,
         path: str,
         max_tx_per_batch: int = 0,
-        num_partitions: int = 4,
+        num_partitions: Optional[int] = None,
         emit_messages: bool = False,
         consumer: str | None = None,
     ) -> DataFrame:
         """Streaming change-event envelope (flat schema, models.ENVELOPE_DDL).
-        ``emit_messages=True`` surfaces pg_logical_emit_message frames as
-        op='M' rows (the transactional-outbox pattern).  ``consumer``
-        names this reader so N independent materializers can share one
-        replay log — retention then runs at the min ack across consumers
-        (the replication-slot model; see sources/pgcdc.py)."""
+        ``num_partitions`` caps each micro-batch's decode partitions
+        (default ``defaultParallelism``); below the cap the batch's byte
+        span decides, one partition per 256 KiB floor, so a small live
+        batch runs as one task.  ``emit_messages=True`` surfaces
+        pg_logical_emit_message frames as op='M' rows (the
+        transactional-outbox pattern).  ``consumer`` names this reader so
+        N independent materializers can share one replay log — retention
+        then runs at the min ack across consumers (the replication-slot
+        model; see sources/pgcdc.py)."""
         reader = (
             self.spark.readStream.format("pgcdc")
             .option("path", path)
-            .option("numPartitions", str(num_partitions))
+            .option(
+                "numPartitions",
+                str(num_partitions or self.spark.sparkContext.defaultParallelism),
+            )
         )
         if max_tx_per_batch:
             reader = reader.option("maxTxPerBatch", str(max_tx_per_batch))
@@ -75,8 +82,13 @@ class PgCdcEngine:
         return reader.load()
 
     def snapshot(self, path: str, emit_messages: bool = False) -> DataFrame:
-        """Batch read of the full change log (initial-sync path, S3)."""
-        reader = self.spark.read.format("pgcdc").option("path", path)
+        """Batch read of the full change log (initial-sync path, S3),
+        partitioned like :meth:`stream` under its default cap."""
+        reader = (
+            self.spark.read.format("pgcdc")
+            .option("path", path)
+            .option("numPartitions", str(self.spark.sparkContext.defaultParallelism))
+        )
         if emit_messages:
             reader = reader.option("emitMessages", "true")
         return reader.load()

@@ -56,12 +56,14 @@ first 64 payload bytes (``Relation`` frames whole).  That one pass
 (:func:`scan_log`; the stream reader runs it incrementally) folds the
 schema registry and finds the whole-transaction ranges; partitions are
 planned from those ranges, never by re-reading the log.  Payload decode
-happens executor-side, parallel across transactions (``numPartitions``
-splits each batch at tx boundaries — already more parallel than the
-reference's single thread).  A production deployment
-points the same reader at a live replication socket (one tailer writes the
-log; see ``pgwire.WireReplicationTailer``), making the log both the replay buffer and
-the at-least-once boundary.
+happens executor-side, parallel across transactions: each batch splits
+at tx boundaries into one partition per 256 KiB of its byte span
+(``_PARTITION_FLOOR_BYTES``), capped at ``numPartitions`` — already more
+parallel than the reference's single thread, while a small live batch
+runs as one task instead of paying the per-task overhead N times.  A
+production deployment points the same reader at a live replication
+socket (one tailer writes the log; see ``pgwire.WireReplicationTailer``),
+making the log both the replay buffer and the at-least-once boundary.
 """
 
 from __future__ import annotations
@@ -70,6 +72,7 @@ import bisect
 import contextlib
 import fcntl
 import json
+import math
 import operator
 import os
 import re
@@ -151,6 +154,15 @@ def _read_range(part: TxRangePartition) -> Iterator[Tuple]:
             yield ev.as_flat_tuple()
 
 
+# Byte span per decode partition below the ``numPartitions`` cap.  One
+# core decodes about 2.7 MB/s (~35k events/s x 77 B/event on the
+# perfbench log), and each task costs ~50 ms of fixed work (a Python
+# worker round trip, one output file).  A split pays only once each part
+# decodes for longer than that overhead (50 ms x 2.7 MB/s ~ 135 KB);
+# 256 KiB (~95 ms of decode) keeps a 2x margin.
+_PARTITION_FLOOR_BYTES = 256 * 1024
+
+
 def _plan_partitions(
     path: str,
     ranges: Sequence[Tuple[int, int]],
@@ -160,12 +172,15 @@ def _plan_partitions(
     on_decode_error: str = "fail",
     emit_messages: bool = False,
 ) -> Sequence[TxRangePartition]:
-    """Group contiguous whole-transaction ``ranges`` into ≤ num_partitions
-    chunks of similar byte size."""
+    """Group contiguous whole-transaction ``ranges`` into chunks of
+    similar byte size: one per ``_PARTITION_FLOOR_BYTES`` of the batch's
+    span, at least one, at most ``num_partitions`` (a cap, not a count)."""
     if not ranges:
         return []
     total = ranges[-1][1] - ranges[0][0]
-    target = max(1, total // max(1, num_partitions))
+    floors = math.ceil(total / _PARTITION_FLOOR_BYTES)
+    num_partitions = max(1, min(num_partitions, floors))
+    target = max(1, total // num_partitions)
     parts: List[TxRangePartition] = []
     chunk_start = ranges[0][0]
     acc = 0

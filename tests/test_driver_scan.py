@@ -10,20 +10,24 @@ ranges; partitions are planned from those ranges.  Pins:
   streamed span, a two-phase prepared transaction and an ALTER;
 * a fresh reader replaying a checkpointed batch plans the same
   partitions;
+* a batch plans one partition per ``_PARTITION_FLOOR_BYTES`` of its
+  byte span, at least one and at most ``numPartitions``;
 * on a retention-GC'd log a fresh consumer's first batch, and
   ``register_cdc_views``, start at the retained window.
 """
 
+import math
 from collections import Counter
 from datetime import datetime, timezone
 
 import pytest
 
 from pypgcdc_spark.cdc import pgoutput as pg
-from pypgcdc_spark.sources import replay
+from pypgcdc_spark.sources import pgcdc, replay
 from pypgcdc_spark.sources.pgcdc import PgCdcStreamReader
 from pypgcdc_spark.testing import INTEGRATION_COLS, INTEGRATION_RELID, WorkloadWriter
 from tests.test_replay_segmentation import _write_plain, _write_segmented
+from tests.test_source_scale import _big_log
 
 TS = datetime(2024, 1, 1, tzinfo=timezone.utc)
 WIDER_COLS = INTEGRATION_COLS + [(False, "extra", 25, -1)]
@@ -130,7 +134,9 @@ def test_driver_reads_each_frame_once(tmp_path, monkeypatch):
 
 
 @pytest.mark.parametrize("num_partitions", [1, 3])
-def test_partitions_match_tx_boundary_plan(tmp_path, num_partitions):
+def test_partitions_match_tx_boundary_plan(tmp_path, monkeypatch, num_partitions):
+    # A 1-byte floor lets this small log split up to the cap.
+    monkeypatch.setattr(pgcdc, "_PARTITION_FLOOR_BYTES", 1)
     log = str(tmp_path / "mixed.log")
     _write_mixed(log)
     opts = {"path": log, "maxtxperbatch": 3, "numpartitions": num_partitions}
@@ -158,6 +164,35 @@ def test_partitions_match_tx_boundary_plan(tmp_path, num_partitions):
     assert covered[0][0] == 0 and covered[-1][1] == ranges[-1][1]
     assert all(e == s for (_, e), (s, _) in zip(covered, covered[1:]))
     assert ranges[-1][1] < replay.log_size(log)
+
+
+@pytest.mark.parametrize("cap", [1, 3, 8])
+def test_partition_count_follows_byte_span(tmp_path, cap):
+    # 1200 ten-row transactions span about 3.5 floors.
+    log, n_rows = _big_log(tmp_path, n_tx=1200, rows_per_tx=10)
+    floor = pgcdc._PARTITION_FLOOR_BYTES
+    ends = {e for _, e in replay.tx_boundaries(log)}
+    floors_seen = set()
+    # 100-tx batches span under a floor; 500-tx batches about 1.5; one
+    # batch of the whole log about 3.5.
+    for max_tx in (100, 500, 0):
+        reader = PgCdcStreamReader(
+            {"path": log, "maxtxperbatch": max_tx, "numpartitions": cap}
+        )
+        ids = []
+        for start, end, parts in _batches(reader):
+            k = math.ceil((end["pos"] - start["pos"]) / floor)
+            floors_seen.add(k)
+            assert len(parts) == min(k, cap)
+            # The parts tile [start, end) and split it only at tx ends.
+            bounds = [(p.start_pos, p.end_pos) for p in parts]
+            assert bounds[0][0] == start["pos"] and bounds[-1][1] == end["pos"]
+            assert all(e == s for (_, e), (s, _) in zip(bounds, bounds[1:]))
+            assert {e for _, e in bounds} <= ends
+            ids += [int(row[9]["id"]) for p in parts for row in reader.read(p)]
+        # Every committed row once.
+        assert sorted(ids) == list(range(n_rows))
+    assert {1, 2, 4} <= floors_seen
 
 
 def test_partitions_reject_offsets_off_tx_boundaries(tmp_path):

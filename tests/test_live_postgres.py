@@ -755,6 +755,13 @@ def test_live_drain_poll_drain_adopts_open_tail(live, tmp_path):
             "INSERT INTO accounts (id, balance, name) "
             "SELECT i + 12000, i * 0.5, 'adopt_' || i FROM generate_series(1, 2000) g(i)"
         )
+        # The walsender decodes only flushed WAL, and only the WAL writer
+        # flushes an open transaction's WAL.  Once idle, it sleeps 5 s
+        # (25 x wal_writer_delay) between flushes, longer than the 3 s
+        # idle window of the drain below, which then saw no frames.  A
+        # committed transaction with an xid flushes all WAL before its
+        # commit record, and pgoutput sends nothing for it.
+        live.sql("SELECT txid_current()")
         n1 = _drain(t)  # tx still open: spilled segments, torn tail
         frames_mid = list(scan_frames(log))
         kinds_mid = {fr.payload[:1] for fr in frames_mid}

@@ -299,7 +299,16 @@ def test_concurrent_commit_republish_no_shared_tmp(tmp_path):
     (FileNotFoundError on the losing os.replace / torn JSON published to
     the tailer).  Hammer commits from two threads; every republish must
     succeed and the published watermark must always parse and hold the
-    min."""
+    min.
+
+    A one-off failure here (published ``.ack`` at pos 0) predates the
+    one-ack protocol: a committer read the sibling's pos-0 registration
+    sidecar, was descheduled while the sibling committed and published,
+    then published its stale min.  Reading the sidecars and publishing
+    now run under one ``flock`` after each committer writes its own
+    sidecar, so the last publisher always sees both final acks
+    (forced deterministically by
+    ``test_descheduled_committer_cannot_publish_stale_min``)."""
     import threading
 
     seg = _mk_segmented(tmp_path)
@@ -311,7 +320,9 @@ def test_concurrent_commit_republish_no_shared_tmp(tmp_path):
     def _hammer(reader, end):
         try:
             for _ in range(50):
-                reader._acked_pos = 0  # re-arm the monotonic guard
+                # Re-arm the monotonic guard; 0 would re-seed it from
+                # the own sidecar and turn every later commit into a no-op.
+                reader._acked_pos = -1
                 reader.commit(dict(end))
         except Exception as exc:  # noqa: BLE001 — the pin IS no exception
             errors.append(exc)

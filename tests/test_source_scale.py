@@ -49,9 +49,18 @@ def test_codec_decode_throughput(tmp_path):
 
 
 def test_parallel_partitions_and_boundaries(spark, tmp_path):
-    from pypgcdc_spark.sources.pgcdc import PgCdcDataSource, PgCdcStreamReader
+    from pypgcdc_spark.sources import replay
+    from pypgcdc_spark.sources.pgcdc import (
+        _PARTITION_FLOOR_BYTES,
+        PgCdcDataSource,
+        PgCdcStreamReader,
+    )
 
-    log, n_rows = _big_log(tmp_path, n_tx=400, rows_per_tx=10)
+    # The smallest such log spanning more than 7 partition floors, so
+    # the cap of 8, not the byte span, sets the count.
+    log, n_rows = _big_log(tmp_path, n_tx=2407, rows_per_tx=10)
+    ranges = replay.tx_boundaries(log)
+    assert ranges[-1][1] - ranges[0][0] > 7 * _PARTITION_FLOOR_BYTES
 
     # The planner must split the offset range into tx-aligned contiguous
     # partitions (parallel decode — beyond the reference's single thread).
