@@ -9,7 +9,8 @@ Prints ONE JSON line:
      "queries": {"q1": sec, ...}, "sf": 0.1}
 
 Each query executes end-to-end into the noop sink (forces the full plan,
-no result materialization on the driver).
+no result materialization on the driver).  Queries only: the CDC path's
+streaming throughput is measured batch by batch by ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -22,192 +23,130 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q18_large_volume_customer",
-    "q9_profit_by_nation_year",
-    "q13_customer_order_distribution",
-    "q21_sole_late_supplier",
-    "join_self_lineitem_pairs",
-    "agg_cube_orders",
-    "win_topk_orders_per_segment",
-    "stream_session_window",
-    "asof_join_purchase_last_click",
-    "cdc_apply_current_state",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_topk_bruteforce",
-    "ann_lsh_bucketed",
-    "text_quality_score",
-    "multimodal_binary_features",
-]
-
-# Round-2 operators, timed separately so `value` (the 21-query headline
-# total) stays comparable round-over-round; their timings are merged into
-# `queries` and summed in `value_new_ops`.
-NEW_OPS = [
-    "text_pii_scrub",
-    "text_repetition_signals",
-    "pipeline_sequence_packing",
-    "pipeline_decontamination",
-    "pipeline_domain_mix",
-    "ann_ivf_flat",
-    "dedup_connected_components",
-    "stream_dedup_watermark",
-    "cdc_incremental_view",
-    "stream_time_rollup",
-    "stream_stream_join",
-    "text_duplicate_spans",
-]
-
-# Round-3 operators — same treatment: separate sum (`value_new_ops_r3`),
-# merged into `queries`.
-NEW_OPS_R3 = [
-    "bm25_search",
-    "text_unigram_logprob",
-    "win_sessionize_events",
-    "cdc_scd2_history",
-    "agg_percentiles_exact",
-    "graph_pagerank",
-    "dedup_cc_large_star",
-    "multimodal_audio_stats",
-]
-
-# Round-4 operators — separate sum (`value_new_ops_r4`), merged into
-# `queries`.
-NEW_OPS_R4 = [
-    "graph_pagerank_bucketed",
-    "join_bucketed_colocated",
-    "ann_scalar_quantized",
-    "layout_partition_pruned_scan",
-    "layout_dynamic_partition_pruning",
-    "join_bloom_prefilter",
-    "sketch_count_min",
-    "sketch_kmv_distinct",
-    "cdc_time_travel",
-    "embed_kmeans_domains",
-    "dedup_edit_distance",
-    "pipeline_doc_chunking",
-    "timeseries_gap_fill",
-    "retrieval_hybrid_rrf",
-    "timeseries_rolling_stats",
-    "pipeline_temperature_sampling",
-    "events_pattern_detect",
-    "dedup_shingle_containment",
-    "q8_market_share",
-    "q12_late_priority_lines",
-    "q11_revenue_concentration",
-    "q20_dominant_suppliers",
-    "join_shuffle_hash_equivalence",
-    "retrieval_maxsim",
-    "layout_zorder_skipping",
-    "stream_pattern_detect",
-    "dedup_semantic_semdedup",
-    "pipeline_dsir_importance",
-    "ann_product_quantized",
-    "q2_minimum_cost_supplier",
-    "graph_triangle_count",
-    "stream_heavy_hitters",
-    "join_preagg_pushdown_equivalence",
-    "text_bigram_logprob",
-    "sketch_kmv_intersection",
-    "pipeline_train_val_test_split",
-    "pipeline_weighted_sampling",
-    "join_lateral_top_order",
-    "graph_khop_recursive_sql",
-    "layout_range_partition_stats",
-    "cdc_join_view_ivm",
-    "stream_static_enrich",
-    "audit_column_profile",
-    "scalar_variant_shredding",
-    "udtf_polymorphic_parse",
-    "text_dup_span_removal",
-    "source_orc_parity",
-]
-
-# Round-5 additions: pgoutput v2 streamed-tx replay through the source,
-# LSN-span typed views across a type-change/drop schema evolution.
-NEW_OPS_R5 = [
-    "cdc_streamed_tx_replay",
-    "cdc_two_phase_replay",
-    "cdc_schema_evolution_typed",
-    "pipeline_cdc_corpus_refresh",
-    "text_hashed_linear_classifier",
-    "asof_join_tolerance",
-    "session_window_dynamic_gap",
-]
-
-# Round-6 operators — separate sum (`value_new_ops_r6`), merged into
-# `queries`.
-NEW_OPS_R6 = [
-    "source_copy_bootstrap_parity",
-    "cdc_logical_messages",
-    "source_binary_tuple_parity",
-]
-NEW_OPS_R8 = [
-    "ann_ivf_kmeans",  # trained-quantizer IVF (gated r8)
-]
-NEW_OPS_R9 = [
-    # Segmented replay log + in-flight retention GC through the real
-    # streaming engine (gated r9).
-    "source_segmented_retention",
-]
-
-
-def decode_throughput_vs_reference(
-    n_rows: int = 2000,
-    ref_path: str = "/root/reference/src/pypgcdc/decoders.py",
-) -> dict:
-    """Decode the same I/U/D frame mix with this repo's pgoutput decoder
-    and the reference's (file-loaded, stdlib-only), in msg/s each."""
-    import importlib.util
-
-    from pypgcdc_spark.cdc import pgoutput as pg
-
-    frames = []
-    for i in range(n_rows):
-        frames.append(pg.encode_insert(16385, [str(i), None, "1.00", "x" * 20, "a"]))
-        frames.append(pg.encode_update(16385, [str(i), None, "2.00", "y" * 20, "b"]))
-        frames.append(pg.encode_delete(16385, [str(i), None, None, None, None]))
-
-    def one_pass(fn) -> float:
-        t0 = time.perf_counter()
-        for f in frames:
-            fn(f)
-        return len(frames) / (time.perf_counter() - t0)
-
-    if not os.path.exists(ref_path):
-        return {
-            "ours_msg_per_sec": round(max(one_pass(pg.decode_message) for _ in range(3)), 0),
-            "reference": "absent",
-        }
-    # Bench-only, explicitly scoped load of the reference decoder module
-    # (never imported anywhere in the engine itself) so the two decoders
-    # can race on identical frames in the same process.
-    spec = importlib.util.spec_from_file_location("ref_decoders", ref_path)
-    ref = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ref)
-    cls = {b"I": ref.Insert, b"U": ref.Update, b"D": ref.Delete}
-    contenders = [pg.decode_message, lambda f: cls[f[:1]](f)]
-    # Single-threaded decode is GC/frequency-noise-sensitive: run the two
-    # decoders INTERLEAVED within each round (ours, reference, ours,
-    # reference, ...) so frequency/thermal drift hits both equally, and
-    # record each side's best round.
-    best = [0.0, 0.0]
-    for _ in range(3):
-        for i, fn in enumerate(contenders):
-            best[i] = max(best[i], one_pass(fn))
-    ours, refs = best
-    return {
-        "ours_msg_per_sec": round(ours, 0),
-        "reference_msg_per_sec": round(refs, 0),
-        "speedup_vs_reference": round(ours / refs, 2),
-        "n_frames": len(frames),
-    }
+# Every timed query, under the sum that carries it.  "value" is the
+# 21-query headline total; each later round's operators are timed into
+# their own "value_new_ops*" sum so the headline stays comparable
+# round-over-round.  All timings are merged into `queries`.
+OPS = {
+    "value": [
+        "q1_pricing_summary",
+        "q3_shipping_priority",
+        "q5_local_supplier_volume",
+        "q6_forecast_revenue",
+        "q18_large_volume_customer",
+        "q9_profit_by_nation_year",
+        "q13_customer_order_distribution",
+        "q21_sole_late_supplier",
+        "join_self_lineitem_pairs",
+        "agg_cube_orders",
+        "win_topk_orders_per_segment",
+        "stream_session_window",
+        "asof_join_purchase_last_click",
+        "cdc_apply_current_state",
+        "dedup_exact",
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "ann_topk_bruteforce",
+        "ann_lsh_bucketed",
+        "text_quality_score",
+        "multimodal_binary_features",
+    ],
+    "value_new_ops": [
+        "text_pii_scrub",
+        "text_repetition_signals",
+        "pipeline_sequence_packing",
+        "pipeline_decontamination",
+        "pipeline_domain_mix",
+        "ann_ivf_flat",
+        "dedup_connected_components",
+        "stream_dedup_watermark",
+        "cdc_incremental_view",
+        "stream_time_rollup",
+        "stream_stream_join",
+        "text_duplicate_spans",
+    ],
+    "value_new_ops_r3": [
+        "bm25_search",
+        "text_unigram_logprob",
+        "win_sessionize_events",
+        "cdc_scd2_history",
+        "agg_percentiles_exact",
+        "graph_pagerank",
+        "dedup_cc_large_star",
+        "multimodal_audio_stats",
+    ],
+    "value_new_ops_r4": [
+        "graph_pagerank_bucketed",
+        "join_bucketed_colocated",
+        "ann_scalar_quantized",
+        "layout_partition_pruned_scan",
+        "layout_dynamic_partition_pruning",
+        "join_bloom_prefilter",
+        "sketch_count_min",
+        "sketch_kmv_distinct",
+        "cdc_time_travel",
+        "embed_kmeans_domains",
+        "dedup_edit_distance",
+        "pipeline_doc_chunking",
+        "timeseries_gap_fill",
+        "retrieval_hybrid_rrf",
+        "timeseries_rolling_stats",
+        "pipeline_temperature_sampling",
+        "events_pattern_detect",
+        "dedup_shingle_containment",
+        "q8_market_share",
+        "q12_late_priority_lines",
+        "q11_revenue_concentration",
+        "q20_dominant_suppliers",
+        "join_shuffle_hash_equivalence",
+        "retrieval_maxsim",
+        "layout_zorder_skipping",
+        "stream_pattern_detect",
+        "dedup_semantic_semdedup",
+        "pipeline_dsir_importance",
+        "ann_product_quantized",
+        "q2_minimum_cost_supplier",
+        "graph_triangle_count",
+        "stream_heavy_hitters",
+        "join_preagg_pushdown_equivalence",
+        "text_bigram_logprob",
+        "sketch_kmv_intersection",
+        "pipeline_train_val_test_split",
+        "pipeline_weighted_sampling",
+        "join_lateral_top_order",
+        "graph_khop_recursive_sql",
+        "layout_range_partition_stats",
+        "cdc_join_view_ivm",
+        "stream_static_enrich",
+        "audit_column_profile",
+        "scalar_variant_shredding",
+        "udtf_polymorphic_parse",
+        "text_dup_span_removal",
+        "source_orc_parity",
+    ],
+    "value_new_ops_r5": [
+        "cdc_streamed_tx_replay",
+        "cdc_two_phase_replay",
+        "cdc_schema_evolution_typed",
+        "pipeline_cdc_corpus_refresh",
+        "text_hashed_linear_classifier",
+        "asof_join_tolerance",
+        "session_window_dynamic_gap",
+    ],
+    "value_new_ops_r6": [
+        "source_copy_bootstrap_parity",
+        "cdc_logical_messages",
+        "source_binary_tuple_parity",
+    ],
+    "value_new_ops_r8": [
+        "ann_ivf_kmeans",
+    ],
+    "value_new_ops_r9": [
+        "source_segmented_retention",
+    ],
+}
+HEADLINE = OPS["value"]
+ALL_OPS = [n for names in OPS.values() for n in names]
 
 
 def _parallel_canary_worker(n_rows: int) -> float:
@@ -405,7 +344,7 @@ def main():
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
-        for name in HEADLINE + NEW_OPS + NEW_OPS_R3 + NEW_OPS_R4 + NEW_OPS_R5 + NEW_OPS_R6 + NEW_OPS_R8 + NEW_OPS_R9:
+        for name in ALL_OPS:
             try:
                 REGISTRY[name].fn(spark, warm_dir).write.format("noop").mode(
                     "overwrite"
@@ -454,7 +393,7 @@ def main():
 
     tracker = spark.sparkContext.statusTracker()
     per_query_tasks = {}
-    for name in HEADLINE + NEW_OPS + NEW_OPS_R3 + NEW_OPS_R4 + NEW_OPS_R5 + NEW_OPS_R6 + NEW_OPS_R8 + NEW_OPS_R9:
+    for name in ALL_OPS:
         qd = REGISTRY[name]
         # Job-group the whole timed region (construction + passes) so the
         # StatusTracker can report the query's task fan-out afterwards.
@@ -508,56 +447,23 @@ def main():
     except Exception as e:
         scaling_probe = {"error": str(e)[:200]}
 
-    # Steady-state streaming throughput (rows/s over micro-batches after
-    # the first): the one-shot wall clocks above are dominated by RocksDB /
-    # checkpoint cold start, so the stream operators are ALSO measured as a
-    # long-lived job would run them (see operators/stream_bench.py).
-    streaming = {}
-    try:
-        from pypgcdc_spark.operators.stream_bench import steady_state_stream_metrics
+    # Single-thread pure-CPU decode canary, taken after the suite.
+    decode_canary = round(_parallel_canary_worker(2000), 0)
 
-        streaming = steady_state_stream_metrics(spark, sf_dir)
-    except Exception as e:  # never lose the batch record to the stream bench
-        streaming = {"error": str(e)[:200]}
-
-    # Head-to-head pgoutput decode throughput vs the REFERENCE decoder on
-    # identical frames — the one directly comparable single-node number
-    # (the reference is a single-threaded CDC client with no query
-    # surface).  Loaded via importlib straight from decoders.py (stdlib-
-    # only) so the reference package's psycopg2 import is bypassed;
-    # skipped gracefully when the reference checkout is absent.
-    decode_bench = {}
-    try:
-        decode_bench = decode_throughput_vs_reference()
-    except Exception as e:
-        decode_bench = {"error": str(e)[:200]}
-
-    total = round(sum(timings.get(n, 0.0) for n in HEADLINE), 3)
-    total_new = round(sum(timings.get(n, 0.0) for n in NEW_OPS), 3)
-    total_new_r3 = round(sum(timings.get(n, 0.0) for n in NEW_OPS_R3), 3)
-    total_new_r4 = round(sum(timings.get(n, 0.0) for n in NEW_OPS_R4), 3)
-    total_new_r5 = round(sum(timings.get(n, 0.0) for n in NEW_OPS_R5), 3)
-    total_new_r6 = round(sum(timings.get(n, 0.0) for n in NEW_OPS_R6), 3)
-    total_new_r8 = round(sum(timings.get(n, 0.0) for n in NEW_OPS_R8), 3)
-    total_new_r9 = round(sum(timings.get(n, 0.0) for n in NEW_OPS_R9), 3)
+    sums = {
+        key: round(sum(timings.get(n, 0.0) for n in names), 3)
+        for key, names in OPS.items()
+    }
+    total = sums["value"]
     full = {
         "metric": "headline_suite_wall_seconds",
-        "value": total,
+        **sums,
         "unit": "sec",
-        "value_new_ops": total_new,
-        "value_new_ops_r3": total_new_r3,
-        "value_new_ops_r4": total_new_r4,
-        "value_new_ops_r5": total_new_r5,
-        "value_new_ops_r6": total_new_r6,
-        "value_new_ops_r8": total_new_r8,
-        "value_new_ops_r9": total_new_r9,
         "failed": failed,
         "queries": timings,
         "first_run_sec": first_run,
         "fixture_sec": fixture_sec,
         "value_first_run": round(sum(first_run.get(n, 0.0) for n in HEADLINE), 3),
-        "streaming_steady_state": streaming,
-        "decode_throughput": decode_bench,
         # Core-scaling contract evidence (VERDICT r12 next-round #2): the
         # sf0.1 suite's walls are fixed-cost-bound, so this block carries
         # the direct proof that $SPARK_GRAFT_CPUS is honored and that the
@@ -588,9 +494,8 @@ def main():
             "loadavg_end": [round(x, 2) for x in os.getloadavg()],
             "os_cpu_count": os.cpu_count(),
             "headline_is_min_of": 2,
-            "streaming_rows_min_of": 2,
             "all_rows_min_of": 2,  # r12: the batch tail too (see reps above)
-            "decode_canary_msg_per_sec": decode_bench.get("ours_msg_per_sec"),
+            "decode_canary_msg_per_sec": decode_canary,
             "parallel_canary": parallel_canary,
             # Summary of the `scaling` block: how many benched queries
             # demonstrably fan out vs run few-task at this SF.
@@ -636,9 +541,9 @@ def main():
                 "metric": "headline_suite_wall_seconds",
                 "value": total,
                 "unit": "sec",
-                "value_new_ops": total_new,
-                "value_new_ops_r3": total_new_r3,
-                "value_new_ops_r4": total_new_r4,
+                "value_new_ops": sums["value_new_ops"],
+                "value_new_ops_r3": sums["value_new_ops_r3"],
+                "value_new_ops_r4": sums["value_new_ops_r4"],
                 "failed": failed,
                 # ADDED entry (never removes/renames): the scaling probe
                 # rides the compact line so the driver's low/high core legs

@@ -430,6 +430,33 @@ def stream_time_rollup(spark, sf_dir):
     )
 
 
+def purchase_click_join(purchases, clicks):
+    """The purchase⋈click interval join: each click of the same user
+    within the hour before a purchase.  ``purchases`` and ``clicks`` are
+    event streams with ``user_id``, ``event_id`` and ``ev_ts``.
+
+    Each side is watermarked 1 minute behind its event time; the join's
+    state horizon adds the 1-hour interval on top, so both state stores
+    drop rows older than watermark − 1h.  The delay is late-data
+    tolerance only: the event log is LSN-ordered and its ts is monotone
+    in event_id (zero measured lateness), and a 2-hour delay tripled the
+    retained state for nothing (r4's slowest-kernel finding)."""
+
+    def side(events, prefix):
+        return events.select(
+            F.col("user_id").alias(f"{prefix}_user"),
+            F.col("event_id").alias(f"{prefix}_id"),
+            F.col("ev_ts").alias(f"{prefix}_ts"),
+        ).withWatermark(f"{prefix}_ts", "1 minute")
+
+    return side(purchases, "p").join(
+        side(clicks, "c"),
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("c_ts") <= F.col("p_ts")),
+    )
+
+
 @query(
     "stream_stream_join",
     oracle="""
@@ -448,41 +475,14 @@ def stream_time_rollup(spark, sf_dir):
 )
 def stream_stream_join(spark, sf_dir):
     """REAL stream-stream interval join: two watermarked readers over the
-    events stream (purchases ⋈ clicks of the same user within the
-    preceding hour) — the double-sided state-store join shape; watermarks
-    + the interval condition bound both state stores (each side can drop
-    rows older than watermark − 1h).  The drained append output is
-    aggregated and must hash-match the batch interval-join oracle."""
-    import uuid
+    events stream (``purchase_click_join``) — the double-sided
+    state-store join shape.  The drained append output is aggregated and
+    must hash-match the batch interval-join oracle."""
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    def events(event_type):
+        return _events_stream(spark, sf_dir).filter(F.col("event_type") == event_type)
 
-    def _stream(event_type, prefix):
-        s = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        return (
-            s.filter(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                event_ts_expr(schema).alias(f"{prefix}_ts"),
-            )
-            .withWatermark(f"{prefix}_ts", "2 hours")
-        )
-
-    purchases = _stream("purchase", "p")
-    clicks = _stream("click", "c")
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-    )
+    joined = purchase_click_join(events("purchase"), events("click"))
     return (
         _drain(spark, joined, "ssj", "append")
         .groupBy(F.col("p_user").alias("user_id"))

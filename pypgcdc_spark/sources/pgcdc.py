@@ -268,19 +268,26 @@ def scan_log(
     return registry, ranges
 
 
+def _set_log_options(reader, options, missing_path: str) -> None:
+    """Parse the options both readers take onto ``reader``: path,
+    database, numPartitions, onDecodeError and emitMessages.  Raises
+    ``missing_path`` without a path."""
+    reader.path = options.get("path")
+    if not reader.path:
+        raise ValueError(missing_path)
+    reader.database = options.get("database", "replay")
+    reader.num_partitions = int(options.get("numpartitions", 4) or 4)
+    reader.on_decode_error = options.get("ondecodeerror", "fail").lower()
+    # Outbox surface: emit pg_logical_emit_message frames as op='M'.
+    reader.emit_messages = str(
+        options.get("emitmessages", "false")
+    ).lower() in ("true", "1", "yes")
+
+
 class PgCdcStreamReader(DataSourceStreamReader):
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("pgcdc source requires option 'path' (replay log)")
-        self.database = options.get("database", "replay")
+        _set_log_options(self, options, "pgcdc source requires option 'path' (replay log)")
         self.max_tx = int(options.get("maxtxperbatch", 0) or 0)
-        self.num_partitions = int(options.get("numpartitions", 4) or 4)
-        self.on_decode_error = options.get("ondecodeerror", "fail").lower()
-        # Outbox surface: emit pg_logical_emit_message frames as op='M'.
-        self.emit_messages = str(
-            options.get("emitmessages", "false")
-        ).lower() in ("true", "1", "yes")
         # Every reader is a consumer with its own ack sidecar (the
         # replication-slot model, one slot per consumer); an unnamed
         # reader is "__default__".
@@ -752,15 +759,7 @@ class PgCdcBatchReader(DataSourceReader):
     ``spark.read.format("pgcdc").option("path", ...).load()``."""
 
     def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("pgcdc source requires option 'path'")
-        self.database = options.get("database", "replay")
-        self.num_partitions = int(options.get("numpartitions", 4) or 4)
-        self.on_decode_error = options.get("ondecodeerror", "fail").lower()
-        self.emit_messages = str(
-            options.get("emitmessages", "false")
-        ).lower() in ("true", "1", "yes")
+        _set_log_options(self, options, "pgcdc source requires option 'path'")
 
     def partitions(self) -> Sequence[InputPartition]:
         # A batch read covers the retained window (see scan_log).
@@ -774,10 +773,13 @@ class PgCdcBatchReader(DataSourceReader):
             self.on_decode_error,
             self.emit_messages,
         )
+        # Only closed transactions are read: with none in the log, one
+        # empty partition (Spark hands read() None for an empty list).
+        start = replay.log_min_pos(self.path)
         return parts or [
             TxRangePartition(
-                self.path, replay.log_min_pos(self.path), replay.log_size(self.path),
-                registry.dumps(), self.database, self.on_decode_error, self.emit_messages,
+                self.path, start, start, registry.dumps(), self.database,
+                self.on_decode_error, self.emit_messages,
             )
         ]
 

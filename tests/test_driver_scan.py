@@ -13,7 +13,9 @@ ranges; partitions are planned from those ranges.  Pins:
 * a batch plans one partition per ``_PARTITION_FLOOR_BYTES`` of its
   byte span, at least one and at most ``numPartitions``;
 * on a retention-GC'd log a fresh consumer's first batch, and
-  ``register_cdc_views``, start at the retained window.
+  ``register_cdc_views``, start at the retained window;
+* a batch read returns closed transactions only, also when the log
+  holds none.
 """
 
 import math
@@ -236,3 +238,30 @@ def test_register_cdc_views_on_gcd_log(spark, tmp_path):
     names = PgCdcEngine(spark).register_cdc_views(seg, prefix="gcd_")
     assert "gcd_integration_current" in names
     assert spark.table("gcd_integration_current").count() > 0
+
+
+def _batch_rows(path):
+    """A batch read in process: ``partitions()`` then ``_read_range``."""
+    parts = pgcdc.PgCdcBatchReader({"path": path}).partitions()
+    assert parts, "Spark hands read() None for an empty partition list"
+    return [t for p in parts for t in pgcdc._read_range(p)]
+
+
+@pytest.mark.parametrize("committed", [0, 1])
+def test_batch_read_skips_open_transaction(tmp_path, committed):
+    """An open transaction at the log's tail is not read, also when no
+    transaction before it closed; an empty log reads nothing."""
+    empty = str(tmp_path / "empty.log")
+    WorkloadWriter(empty).close()
+    assert _batch_rows(empty) == []
+
+    log = str(tmp_path / "open.log")
+    w = WorkloadWriter(log)
+    w.relation(INTEGRATION_RELID, "integration", INTEGRATION_COLS)
+    for k in range(committed):
+        w.tx([_ins(k)])
+    w.writer.append(w._next(), pg.encode_begin(w.lsn + 20, TS, 999))
+    w.writer.append(w._next(), _ins(100))
+    w.close()
+    rows = _batch_rows(log)
+    assert [(t[0], t[9]["id"]) for t in rows] == [("I", str(k)) for k in range(committed)]

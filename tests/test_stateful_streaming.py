@@ -2,7 +2,6 @@
 
 from datetime import datetime, timedelta
 
-import pytest
 from pyspark.sql import functions as F
 
 T0 = datetime(2024, 1, 1)
@@ -142,17 +141,21 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert rows[0].click_ts == T0 + timedelta(minutes=1)
 
 
-def _run_latest_version_scenario(spark, tmp_path, feed_fn, tag):
-    """Shared duplicate/out-of-order replay scenario for both state APIs."""
-    src = str(tmp_path / f"src_{tag}")
+def test_latest_version_feed_v1_and_v2_equivalence(spark, tmp_path):
+    """Duplicate/out-of-order replays emit nothing; only genuine version
+    advances flow downstream (``latest_version_feed`` on
+    applyInPandasWithState, the state API that runs on every image)."""
+    from pypgcdc_spark.streaming.stateful import latest_version_feed
+
+    src = str(tmp_path / "src")
     _write(spark, src, [(1, 10, "I", 1.0, T0), (1, 20, "U", 2.0, T0), (2, 5, "I", 9.0, T0)])
     stream = spark.readStream.schema(CHANGES_DDL).parquet(src)
     q = (
-        feed_fn(stream.select("user_id", "lsn", "op", "value"))
+        latest_version_feed(stream.select("user_id", "lsn", "op", "value"))
         .writeStream.format("memory")
-        .queryName(f"tw_sink_{tag}")
+        .queryName("tw_sink_v1")
         .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
     q.processAllAvailable()
@@ -161,49 +164,13 @@ def _run_latest_version_scenario(spark, tmp_path, feed_fn, tag):
     _write(spark, src, [(1, 20, "U", 2.0, T0), (1, 15, "U", 1.5, T0), (2, 30, "D", 0.0, T0)])
     q.processAllAvailable()
     q.stop()
-    return [
+    got = [
         (r.user_id, r.lsn, r.op)
-        for r in spark.sql(
-            f"SELECT * FROM tw_sink_{tag} ORDER BY user_id, lsn"
-        ).collect()
+        for r in spark.sql("SELECT * FROM tw_sink_v1 ORDER BY user_id, lsn").collect()
     ]
-
-
-def test_latest_version_feed_v1_and_v2_equivalence(spark, tmp_path):
-    """Duplicate/out-of-order replays emit nothing; only genuine version
-    advances flow downstream.  The v1 (applyInPandasWithState) operator
-    runs everywhere; the v2 (transformWithStateInPandas) twin additionally
-    runs wherever its protobuf dependency exists and must produce the SAME
-    output.  Without protobuf this pins the documented gate instead of
-    skipping, and upgrades itself to the live equivalence check the moment
-    the dependency appears."""
-    from pypgcdc_spark.streaming.stateful_v2 import (
-        latest_version_feed,
-        latest_version_feed_v1,
-    )
-
-    expected = [(1, 20, "U"), (2, 5, "I"), (2, 30, "D")]
     # Key 1: only the batch-1 emission (lsn 20); replays suppressed.
     # Key 2: lsn 5 then the advance to 30.
-    assert _run_latest_version_scenario(spark, tmp_path, latest_version_feed_v1, "v1") == expected
-
-    try:
-        from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-        have_protobuf = True
-    except ModuleNotFoundError:
-        have_protobuf = False
-    if have_protobuf:
-        assert (
-            _run_latest_version_scenario(spark, tmp_path, latest_version_feed, "v2")
-            == expected
-        )
-    else:
-        # Documented-impossible-here: pyspark's state-server RPC framing
-        # (StateMessage_pb2) hard-imports google.protobuf, absent in this
-        # container with installs disallowed (stateful_v2.py module doc).
-        with pytest.raises(ModuleNotFoundError, match="google"):
-            from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401, F811
+    assert got == [(1, 20, "U"), (2, 5, "I"), (2, 30, "D")]
 
 
 def test_pattern_matcher_fires_across_batch_boundary(spark, tmp_path):
@@ -300,20 +267,33 @@ def test_statestore_reader_exposes_aggregation_state(spark, sf_dir, tmp_path):
 
 
 def test_interval_join_parity_and_state_eviction(spark, sf_dir, tmp_path):
-    """The bench's stream-stream interval join with the tightened 1-minute
-    watermark (r5): (a) the streamed result equals the batch recompute —
-    the replay is event-time-monotone, so the tight delay drops nothing;
-    (b) statestore forensics prove rows actually LEAVE the join state —
-    both sides retain only the watermark+interval horizon, not the full
-    stream (the r4 slowest-kernel fix is real eviction, not luck)."""
+    """``purchase_click_join`` (the join ``stream_stream_join`` runs) over
+    the LSN-chunked event log, one chunk per micro-batch: (a) the streamed
+    result equals the batch recompute — the replay is event-time-monotone,
+    so the 1-minute watermark drops nothing; (b) statestore forensics
+    prove rows actually LEAVE the join state — both sides retain only the
+    watermark+interval horizon, not the full stream."""
     import pyspark.sql.functions as F
 
-    from pypgcdc_spark.operators import stream_bench as sb
-    from pypgcdc_spark.queries import event_ts_expr
+    from pypgcdc_spark.operators.cdc_queries import IVM_CHUNKS, _chunked_event_log
+    from pypgcdc_spark.operators.streaming_windows import purchase_click_join
+    from pypgcdc_spark.queries import load
 
     work = str(tmp_path)
-    log_dir = sb._chunked_events(spark, sf_dir, work)
-    joined = sb.interval_join_stream(spark, sf_dir, log_dir)
+    (events,) = load(spark, sf_dir, "events")
+    log_dir = _chunked_event_log(spark, sf_dir, events)
+    schema = spark.read.parquet(log_dir).schema
+
+    def side(event_type):
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(log_dir)
+            .filter(F.col("event_type") == event_type)
+            .withColumnRenamed("ts", "ev_ts")
+        )
+
+    joined = purchase_click_join(side("purchase"), side("click"))
     q = (
         joined.writeStream.format("memory")
         .queryName("ssj_parity")
@@ -323,29 +303,25 @@ def test_interval_join_parity_and_state_eviction(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination(300)
+    assert q.lastProgress["batchId"] >= IVM_CHUNKS - 1
     got = {
         (r.p_user, r.p_id, r.c_id)
         for r in spark.sql("SELECT p_user, p_id, c_id FROM ssj_parity").collect()
     }
 
     # Batch recompute over the same data with the same predicate.
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "user_id", "event_type", event_ts_expr(schema).alias("ev_ts")
-    )
-
-    def side(et, p):
-        return ev.filter(F.col("event_type") == et).select(
+    def batch_side(et, p):
+        return events.filter(F.col("event_type") == et).select(
             F.col("user_id").alias(f"{p}_user"),
             F.col("event_id").alias(f"{p}_id"),
-            F.col("ev_ts").alias(f"{p}_ts"),
+            F.col("ts").alias(f"{p}_ts"),
         )
 
     want = {
         (r.p_user, r.p_id, r.c_id)
-        for r in side("purchase", "p")
+        for r in batch_side("purchase", "p")
         .join(
-            side("click", "c"),
+            batch_side("click", "c"),
             (F.col("p_user") == F.col("c_user"))
             & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
             & (F.col("c_ts") <= F.col("p_ts")),
@@ -355,10 +331,10 @@ def test_interval_join_parity_and_state_eviction(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
     # State forensics: the retained join state is the horizon, not the
-    # stream.  The events span ~30 days in 6 chunks; the purchase side
-    # keeps ~(last chunk + 1min), the click side adds the 1h interval.
-    n_purch = ev.filter(F.col("event_type") == "purchase").count()
-    n_click = ev.filter(F.col("event_type") == "click").count()
+    # stream.  The events span ~30 days in IVM_CHUNKS chunks; the purchase
+    # side keeps ~(last chunk + 1min), the click side adds the 1h interval.
+    n_purch = events.filter(F.col("event_type") == "purchase").count()
+    n_click = events.filter(F.col("event_type") == "click").count()
     left = spark.read.format("statestore").option("joinSide", "left").load(
         f"{work}/ckpt_ssj"
     )

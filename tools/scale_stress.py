@@ -623,38 +623,6 @@ def main() -> None:
         if not only or any("churn_model" in s for s in only):
             report["queries"].update(r12_churn_model_kernel(spark))
 
-        # -- streaming interval-join kernel: steady-state rows/s at both
-        # scales (disjoint per-replica users ⇒ identical join structure;
-        # the scale property is throughput holding, not wall time).
-        from pypgcdc_spark.operators.stream_bench import (
-            _chunked_events,
-            _drain,
-            interval_join_stream,
-        )
-
-        ij = {}
-        for tag, d in (() if only else (("sf0.1", BASE), (f"x{repl}", work))):
-            sb_work = tempfile.mkdtemp(prefix="sb_stress_")
-            try:
-                log_dir = _chunked_events(spark, d, sb_work)
-                m = _drain(
-                    interval_join_stream(spark, d, log_dir), sb_work, "join", "append"
-                )
-                ij[tag] = m
-            finally:
-                shutil.rmtree(sb_work, ignore_errors=True)
-        if ij:
-            base_rps = ij["sf0.1"].get("rows_per_sec") or 0
-            scaled_rps = ij[f"x{repl}"].get("rows_per_sec") or 0
-            report["queries"]["stream_interval_join_kernel"] = {
-                "sf0.1_rows_per_sec": base_rps,
-                f"x{repl}_rows_per_sec": scaled_rps,
-                "throughput_ratio": round(scaled_rps / base_rps, 2)
-                if base_rps
-                else None,
-                "detail": ij,
-            }
-
         # -- absolute correctness at the scaled size ---------------------
         sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__))))
         from check_correctness import frame_fingerprint
