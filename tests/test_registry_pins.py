@@ -4,6 +4,8 @@ first 50 queries alphabetically, so the primary window must stay EXACTLY
 gate) and every SURVEY §2.2 capability category must keep at least one
 primary representative (round-3 verdict task 8)."""
 
+import inspect
+
 from pypgcdc_spark.queries import EXTENDED, REGISTRY, ensure_registered
 
 ensure_registered()
@@ -82,3 +84,15 @@ def test_every_category_keeps_a_primary_representative():
 def test_extended_names_all_registered():
     unknown = EXTENDED - set(REGISTRY)
     assert not unknown, f"EXTENDED references unregistered queries: {unknown}"
+
+
+def test_every_entry_takes_spark_and_sf_dir():
+    # A helper decorated by mistake takes the registry entry and still
+    # passes the pins above; the driver calls every entry as fn(spark, sf_dir).
+    for name, q in REGISTRY.items():
+        params = list(inspect.signature(q.fn).parameters.values())
+        assert [p.name for p in params[:2]] == ["spark", "sf_dir"], (
+            f"{name} is bound to {q.fn.__qualname__}{inspect.signature(q.fn)}"
+        )
+        required = [p.name for p in params[2:] if p.default is inspect.Parameter.empty]
+        assert not required, f"{name} takes extra parameters without defaults: {required}"
